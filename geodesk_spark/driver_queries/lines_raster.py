@@ -1,8 +1,5 @@
 """Driver-contract query builders (split from __spark_entry__.py).
-
-Auto-split by tools/split_entry.py: statements keep their original
-relative order; cross-module imports are computed from the actual
-name-reference graph.  See registry.py for the assembled QUERIES."""
+See registry.py for the assembled QUERIES."""
 
 from __future__ import annotations
 
@@ -2306,6 +2303,26 @@ def _ovl_clip_exprs() -> list[tuple[str, str]]:
     ]
 
 
+def _ring_col(verts: list[tuple[str, str]]):
+    """Spark ring column (array<struct<x,y>> double) from vertex exprs."""
+    return F.array(
+        *[
+            F.struct(
+                F.expr(vx).cast("double").alias("x"),
+                F.expr(vy).cast("double").alias("y"),
+            )
+            for vx, vy in verts
+        ]
+    )
+
+
+def _ring_lit(verts: list[tuple[str, str]]) -> str:
+    """DuckDB twin of _ring_col: a list<struct{x,y}> double literal."""
+    return "[" + ", ".join(
+        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}" for vx, vy in verts
+    ) + "]"
+
+
 def _q_overlay_area(spark, sf_dir):
     """Polygon×polygon overlay intersection area (overlay.overlay_area):
     star-octagon subjects × convex diamond zones — zones broadcast, one
@@ -2317,26 +2334,9 @@ def _q_overlay_area(spark, sf_dir):
 
     o = tables.load_spread(spark, sf_dir, "orders").filter("o_orderkey % 4 = 1")
     _cx, _cy, verts = _ovl_subject_exprs()
-    ring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in verts
-        ]
-    )
-    subj = o.select(F.col("o_orderkey").alias("sid"), ring.alias("ring"))
+    subj = o.select(F.col("o_orderkey").alias("sid"), _ring_col(verts).alias("ring"))
     n = tables.load_spread(spark, sf_dir, "nation")
-    cring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in _ovl_clip_exprs()
-        ]
-    )
+    cring = _ring_col(_ovl_clip_exprs())
     clip = n.select(F.col("n_nationkey").cast("long").alias("cid"), cring.alias("cring"))
     return overlay.overlay_area(subj, clip, clip_k=4)
 
@@ -2345,15 +2345,13 @@ def _overlay_area_sql() -> str:
     from geodesk_spark.operators import overlay
 
     _cx, _cy, verts = _ovl_subject_exprs()
-    s_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}" for vx, vy in verts
-    ) + "]"
-    c_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}"
-        for vx, vy in _ovl_clip_exprs()
-    ) + "]"
-    subject_sql = f"select o_orderkey as sid, {s_ring} as r from orders where o_orderkey % 4 = 1"
-    clip_sql = f"select cast(n_nationkey as bigint) as cid, {c_ring} as cr from nation"
+    subject_sql = (
+        f"select o_orderkey as sid, {_ring_lit(verts)} as r from orders where o_orderkey % 4 = 1"
+    )
+    clip_sql = (
+        f"select cast(n_nationkey as bigint) as cid, {_ring_lit(_ovl_clip_exprs())} as cr "
+        "from nation"
+    )
     return overlay.overlay_area_sql(subject_sql, clip_sql, clip_k=4)
 
 
@@ -2366,30 +2364,13 @@ def _q_areal_interpolate(spark, sf_dir):
 
     o = tables.load_spread(spark, sf_dir, "orders").filter("o_orderkey % 4 = 1")
     _cx, _cy, verts = _ovl_subject_exprs()
-    ring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in verts
-        ]
-    )
     subj = o.select(
         F.col("o_orderkey").alias("sid"),
         F.expr("cast(o_orderkey % 97 + 1 as double)").alias("val"),
-        ring.alias("ring"),
+        _ring_col(verts).alias("ring"),
     )
     n = tables.load_spread(spark, sf_dir, "nation")
-    cring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in _ovl_clip_exprs()
-        ]
-    )
+    cring = _ring_col(_ovl_clip_exprs())
     clip = n.select(F.col("n_nationkey").cast("long").alias("cid"), cring.alias("cring"))
     return overlay.areal_interpolate(subj, clip, clip_k=4, value_col="val")
 
@@ -2398,18 +2379,14 @@ def _areal_interpolate_sql() -> str:
     from geodesk_spark.operators import overlay
 
     _cx, _cy, verts = _ovl_subject_exprs()
-    s_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}" for vx, vy in verts
-    ) + "]"
-    c_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}"
-        for vx, vy in _ovl_clip_exprs()
-    ) + "]"
     subject_sql = (
         "select o_orderkey as sid, cast(o_orderkey % 97 + 1 as double) as val, "
-        f"{s_ring} as r from orders where o_orderkey % 4 = 1"
+        f"{_ring_lit(verts)} as r from orders where o_orderkey % 4 = 1"
     )
-    clip_sql = f"select cast(n_nationkey as bigint) as cid, {c_ring} as cr from nation"
+    clip_sql = (
+        f"select cast(n_nationkey as bigint) as cid, {_ring_lit(_ovl_clip_exprs())} as cr "
+        "from nation"
+    )
     return overlay.areal_interpolate_sql(subject_sql, clip_sql, clip_k=4)
 
 
@@ -2440,15 +2417,7 @@ def _q_zone_line_length(spark, sf_dir):
         F.expr(ey2).cast("double").alias("y2"),
     )
     n = tables.load_spread(spark, sf_dir, "nation")
-    cring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in _ovl_clip_exprs()
-        ]
-    )
+    cring = _ring_col(_ovl_clip_exprs())
     clip = n.select(F.col("n_nationkey").cast("long").alias("cid"), cring.alias("cring"))
     return overlay.zone_line_length(segs, clip, clip_k=4)
 
@@ -2462,11 +2431,10 @@ def _zone_line_length_sql() -> str:
         f"cast({ey1} as double) as y1, cast({ex2} as double) as x2, "
         f"cast({ey2} as double) as y2 from orders where o_orderkey % 4 = 2"
     )
-    c_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}"
-        for vx, vy in _ovl_clip_exprs()
-    ) + "]"
-    clip_sql = f"select cast(n_nationkey as bigint) as cid, {c_ring} as cr from nation"
+    clip_sql = (
+        f"select cast(n_nationkey as bigint) as cid, {_ring_lit(_ovl_clip_exprs())} as cr "
+        "from nation"
+    )
     return overlay.zone_line_length_sql(segs_sql, clip_sql, clip_k=4)
 
 
@@ -2499,26 +2467,9 @@ def _q_overlay_nonconvex(spark, sf_dir):
 
     o = tables.load_spread(spark, sf_dir, "orders").filter("o_orderkey % 4 = 3")
     _cx, _cy, verts = _ovl_subject_exprs()
-    ring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in verts
-        ]
-    )
-    subj = o.select(F.col("o_orderkey").alias("sid"), ring.alias("ring"))
+    subj = o.select(F.col("o_orderkey").alias("sid"), _ring_col(verts).alias("ring"))
     n = tables.load_spread(spark, sf_dir, "nation")
-    cring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in _ovl_lzone_exprs()
-        ]
-    )
+    cring = _ring_col(_ovl_lzone_exprs())
     clip = n.select(F.col("n_nationkey").cast("long").alias("cid"), cring.alias("cring"))
     out = overlay.overlay_area_general(subj, clip, clip_k=6)
     return out.select("sid", F.col("cid").cast("long").alias("cid"), "inter_area")
@@ -2528,15 +2479,13 @@ def _overlay_nonconvex_sql() -> str:
     from geodesk_spark.operators import overlay
 
     _cx, _cy, verts = _ovl_subject_exprs()
-    s_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}" for vx, vy in verts
-    ) + "]"
-    c_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}"
-        for vx, vy in _ovl_lzone_exprs()
-    ) + "]"
-    subject_sql = f"select o_orderkey as sid, {s_ring} as r from orders where o_orderkey % 4 = 3"
-    clip_sql = f"select cast(n_nationkey as bigint) as cid, {c_ring} as cr from nation"
+    subject_sql = (
+        f"select o_orderkey as sid, {_ring_lit(verts)} as r from orders where o_orderkey % 4 = 3"
+    )
+    clip_sql = (
+        f"select cast(n_nationkey as bigint) as cid, {_ring_lit(_ovl_lzone_exprs())} as cr "
+        "from nation"
+    )
     inner = overlay.overlay_area_general_sql(subject_sql, clip_sql, clip_k=6)
     return f"select sid, cast(cid as bigint) as cid, inter_area from ({inner})"
 
@@ -2559,15 +2508,7 @@ def _q_zone_line_length_nonconvex(spark, sf_dir):
         F.expr(ey2).cast("double").alias("y2"),
     )
     n = tables.load_spread(spark, sf_dir, "nation")
-    cring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in _ovl_lzone_exprs()
-        ]
-    )
+    cring = _ring_col(_ovl_lzone_exprs())
     clip = n.select(F.col("n_nationkey").cast("long").alias("cid"), cring.alias("cring"))
     out = overlay.zone_line_length_general(segs, clip, clip_k=6)
     return out.select("seg_id", F.col("cid").cast("long").alias("cid"), "len_in")
@@ -2582,11 +2523,10 @@ def _zone_line_length_nonconvex_sql() -> str:
         f"cast({ey1} as double) as y1, cast({ex2} as double) as x2, "
         f"cast({ey2} as double) as y2 from orders where o_orderkey % 4 = 2"
     )
-    c_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}"
-        for vx, vy in _ovl_lzone_exprs()
-    ) + "]"
-    clip_sql = f"select cast(n_nationkey as bigint) as cid, {c_ring} as cr from nation"
+    clip_sql = (
+        f"select cast(n_nationkey as bigint) as cid, {_ring_lit(_ovl_lzone_exprs())} as cr "
+        "from nation"
+    )
     inner = overlay.zone_line_length_general_sql(segs_sql, clip_sql, clip_k=6)
     return f"select seg_id, cast(cid as bigint) as cid, len_in from ({inner})"
 
@@ -2599,30 +2539,13 @@ def _q_areal_interp_nonconvex(spark, sf_dir):
 
     o = tables.load_spread(spark, sf_dir, "orders").filter("o_orderkey % 4 = 3")
     _cx, _cy, verts = _ovl_subject_exprs()
-    ring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in verts
-        ]
-    )
     subj = o.select(
         F.col("o_orderkey").alias("sid"),
         F.expr("cast(o_orderkey % 97 + 1 as double)").alias("val"),
-        ring.alias("ring"),
+        _ring_col(verts).alias("ring"),
     )
     n = tables.load_spread(spark, sf_dir, "nation")
-    cring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in _ovl_lzone_exprs()
-        ]
-    )
+    cring = _ring_col(_ovl_lzone_exprs())
     clip = n.select(F.col("n_nationkey").cast("long").alias("cid"), cring.alias("cring"))
     out = overlay.areal_interpolate_general(subj, clip, clip_k=6, value_col="val")
     return out.select(F.col("cid").cast("long").alias("cid"), "n_parts", "value_micro_sum")
@@ -2632,18 +2555,14 @@ def _areal_interp_nonconvex_sql() -> str:
     from geodesk_spark.operators import overlay
 
     _cx, _cy, verts = _ovl_subject_exprs()
-    s_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}" for vx, vy in verts
-    ) + "]"
-    c_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}"
-        for vx, vy in _ovl_lzone_exprs()
-    ) + "]"
     subject_sql = (
         "select o_orderkey as sid, cast(o_orderkey % 97 + 1 as double) as val, "
-        f"{s_ring} as r from orders where o_orderkey % 4 = 3"
+        f"{_ring_lit(verts)} as r from orders where o_orderkey % 4 = 3"
     )
-    clip_sql = f"select cast(n_nationkey as bigint) as cid, {c_ring} as cr from nation"
+    clip_sql = (
+        f"select cast(n_nationkey as bigint) as cid, {_ring_lit(_ovl_lzone_exprs())} as cr "
+        "from nation"
+    )
     inner = overlay.areal_interpolate_general_sql(subject_sql, clip_sql, clip_k=6)
     return f"select cast(cid as bigint) as cid, n_parts, value_micro_sum from ({inner})"
 
@@ -2665,56 +2584,35 @@ def _ovl_czone_exprs() -> list[tuple[str, str]]:
 
 
 def _q_overlay_big(spark, sf_dir):
-    """Big-big overlay (overlay.overlay_area_big): star-octagon subjects
-    × fact-sized diamond zones (customer), NEITHER side broadcast — both
-    cover their bbox with 8192-unit grid cells, ONE shuffle equi-join on
-    (gx, gy), exactly-once via the NW-intersection-cell rule (no
-    distinct), then the identical clip chain.  Oracle = the broadcast
-    variant's cross-join SQL (bbox-prefiltered for tractability) —
-    a green row proves the blocking rewrite changes the plan, never the
-    answer (the skew_salted_rollup law)."""
+    """Big-big overlay (overlay.overlay_area with ``cell``): star-octagon
+    subjects × fact-sized diamond zones (customer), NEITHER side
+    broadcast — both cover their bbox with 8192-unit grid cells, ONE
+    shuffle equi-join on (gx, gy), exactly-once via the
+    NW-intersection-cell rule (no distinct), then the identical clip
+    chain.  Oracle = the broadcast strategy's cross-join SQL
+    (bbox-prefiltered for tractability) — a green row proves the
+    blocking rewrite changes the plan, never the answer (the
+    skew_salted_rollup law)."""
     from geodesk_spark.operators import overlay
 
     o = tables.load_spread(spark, sf_dir, "orders").filter("o_orderkey % 8 = 1")
     _cx, _cy, verts = _ovl_subject_exprs()
-    ring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in verts
-        ]
-    )
-    subj = o.select(F.col("o_orderkey").alias("sid"), ring.alias("ring"))
+    subj = o.select(F.col("o_orderkey").alias("sid"), _ring_col(verts).alias("ring"))
     c = tables.load_spread(spark, sf_dir, "customer").filter("c_custkey % 8 = 0")
-    cring = F.array(
-        *[
-            F.struct(
-                F.expr(vx).cast("double").alias("x"),
-                F.expr(vy).cast("double").alias("y"),
-            )
-            for vx, vy in _ovl_czone_exprs()
-        ]
-    )
+    cring = _ring_col(_ovl_czone_exprs())
     clip = c.select(F.col("c_custkey").cast("long").alias("cid"), cring.alias("cring"))
-    return overlay.overlay_area_big(subj, clip, clip_k=4, cell=8192)
+    return overlay.overlay_area(subj, clip, clip_k=4, cell=8192)
 
 
 def _overlay_big_sql() -> str:
     from geodesk_spark.operators import overlay
 
     _cx, _cy, verts = _ovl_subject_exprs()
-    s_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}" for vx, vy in verts
-    ) + "]"
-    c_ring = "[" + ", ".join(
-        f"{{'x': cast({vx} as double), 'y': cast({vy} as double)}}"
-        for vx, vy in _ovl_czone_exprs()
-    ) + "]"
-    subject_sql = f"select o_orderkey as sid, {s_ring} as r from orders where o_orderkey % 8 = 1"
+    subject_sql = (
+        f"select o_orderkey as sid, {_ring_lit(verts)} as r from orders where o_orderkey % 8 = 1"
+    )
     clip_sql = (
-        f"select cast(c_custkey as bigint) as cid, {c_ring} as cr from customer "
-        "where c_custkey % 8 = 0"
+        f"select cast(c_custkey as bigint) as cid, {_ring_lit(_ovl_czone_exprs())} as cr "
+        "from customer where c_custkey % 8 = 0"
     )
     return overlay.overlay_area_sql(subject_sql, clip_sql, clip_k=4, prefilter=True)

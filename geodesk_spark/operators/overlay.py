@@ -10,6 +10,13 @@ bbox prefilter inside the broadcast nested-loop join, then a chain of
 ``clip_k`` Sutherland–Hodgman half-plane passes and one shoelace fold,
 all pure JVM higher-order Columns (zero shuffle, zero Python).
 
+Every public op composes the same steps, each written once per engine:
+zone prep (``_zones`` / ``_zones_sql``: degenerate-zone guard, CCW),
+pairing (``_pairs`` / ``_pairs_sql``: broadcast, or the ``cell``
+grid-blocked join for a fact-sized zone layer), a measure kernel (S-H
+chain + shoelace, or Cyrus–Beck), and for non-convex zones the signed
+fan (``_general`` / ``_general_sql``).
+
 Cross-engine determinism: every pass/fold expression is emitted from the
 SAME generator for Spark and DuckDB with textually identical float op
 order (the tiles_sink.sh_clip_pass_expr law); the chain contains no
@@ -169,6 +176,86 @@ def _edge_exprs(cring: str, clip_k: int, engine: str) -> list[tuple[str, str, st
     return out
 
 
+def _sh_chain(r: str, cring: str, clip_k: int, engine: str) -> str:
+    """The S-H clip of ring ``r`` by zone ring ``cring``: one
+    halfplane_pass_expr per directed zone edge, in edge order."""
+    for i, (ax, ay, bx, by) in enumerate(_edge_exprs(cring, clip_k, engine), 1):
+        r = halfplane_pass_expr(r, ax, ay, bx, by, engine, tag=f"o{i}")
+    return r
+
+
+def _bbox(ring: str, px: str) -> list:
+    """Spark bbox columns ``_{px}x0, _{px}x1, _{px}y0, _{px}y1`` of a ring."""
+    xs = F.transform(F.col(ring), lambda p: p["x"])
+    ys = F.transform(F.col(ring), lambda p: p["y"])
+    return [
+        F.array_min(xs).alias(f"_{px}x0"),
+        F.array_max(xs).alias(f"_{px}x1"),
+        F.array_min(ys).alias(f"_{px}y0"),
+        F.array_max(ys).alias(f"_{px}y1"),
+    ]
+
+
+def _zones(clip: DataFrame, cid: str, c_ring: str) -> DataFrame:
+    """Zone prep, Spark side — every overlay path (convex, the general
+    path's zones AND its fan triangles, the ``cell`` path) reaches its
+    zones through here: drop degenerate zones by the raw-ring guard,
+    then CCW-normalize.  Returns (cid, _cr, _cx0, _cx1, _cy0, _cy1)."""
+    return clip.filter(F.expr(ring_area_positive_expr(c_ring, "spark"))).select(
+        F.col(cid), F.expr(ccw_ring_expr(c_ring, "spark")).alias("_cr"), *_bbox(c_ring, "c")
+    )
+
+
+def _pairs(subj: DataFrame, zones: DataFrame, cell: int | None = None) -> DataFrame:
+    """Candidate (subject, zone) pairs: the bbox columns ``_s*`` of
+    ``subj`` overlap the ``_c*`` of ``zones`` (a plan optimization only:
+    interior overlap implies bbox overlap).
+
+    ``cell=None``: the zones broadcast into a nested-loop join whose
+    condition is the bbox test — zero shuffle.  ``cell=int``: for a
+    fact-sized zone layer that cannot broadcast, both sides cover their
+    bbox with ``cell``-sized grid cells (map-side sequence explode) and
+    meet in ONE shuffle equi-join on the (gx, gy) cell key (AQE splits
+    dense-city skew cells).  Exactly-once with NO distinct-shuffle: a
+    pair sharing k>1 cells keeps only the cell containing the
+    (min-x, min-y) corner of the bbox INTERSECTION — that corner lies in
+    both bboxes, hence in both covers (the crossing_segments_join
+    NW-cell rule generalized to area pairs).  The grid key is a plain
+    int pair — deliberately NOT the engine's packed tile id, whose
+    12-bit row/col caps zoom at 12."""
+    overlap = (
+        (F.col("_sx0") <= F.col("_cx1"))
+        & (F.col("_cx0") <= F.col("_sx1"))
+        & (F.col("_sy0") <= F.col("_cy1"))
+        & (F.col("_cy0") <= F.col("_sy1"))
+    )
+    if cell is None:
+        return subj.crossJoin(F.broadcast(zones)).where(overlap)
+
+    def g(c):
+        return F.floor(c / F.lit(float(cell))).cast("long")
+
+    def cover(df, px):
+        return df.withColumn(
+            "_gx", F.explode(F.sequence(g(F.col(f"_{px}x0")), g(F.col(f"_{px}x1"))))
+        ).withColumn("_gy", F.explode(F.sequence(g(F.col(f"_{px}y0")), g(F.col(f"_{px}y1")))))
+
+    nw = (F.col("_gx") == g(F.greatest("_sx0", "_cx0"))) & (
+        F.col("_gy") == g(F.greatest("_sy0", "_cy0"))
+    )
+    return cover(subj, "s").join(cover(zones, "c"), ["_gx", "_gy"]).where(overlap & nw)
+
+
+def _clipped(subject: DataFrame, clip: DataFrame, clip_k: int, sid: str, cid: str, s_ring: str,
+             c_ring: str, extra: tuple = (), cell: int | None = None) -> DataFrame:
+    """Pairs with the non-empty S-H clip ``_rc`` of the subject ring
+    ``_sr`` by the zone ring; ``extra`` subject columns ride along."""
+    subj = subject.select(F.col(sid), *extra, F.col(s_ring).alias("_sr"), *_bbox(s_ring, "s"))
+    j = _pairs(subj, _zones(clip, cid, c_ring), cell)
+    j = j.withColumn("_rc", F.expr(_sh_chain("_sr", "_cr", clip_k, "spark")))
+    return j.filter(F.size(F.col("_rc")) >= 3)
+
+
 def overlay_area(
     subject: DataFrame,
     clip: DataFrame,
@@ -178,6 +265,7 @@ def overlay_area(
     s_ring: str = "ring",
     c_ring: str = "cring",
     quant: int = 3,
+    cell: int | None = None,
 ) -> DataFrame:
     """Intersection area per (subject, zone) pair — see module docstring.
 
@@ -192,46 +280,60 @@ def overlay_area(
     bbox prefilter culls the nested-loop early — only bbox-overlapping
     pairs pay the clip chain.  At 10^12 subjects the plan is unchanged:
     scan → broadcast NLJ (bbox) → clip chain → filter, no shuffle.
+
+    ``cell``: the big-big strategy, for a zone layer that is ALSO
+    fact-sized (parcel/building footprints at 10¹² scale) and cannot
+    broadcast — grid-blocked shuffle join (see ``_pairs``).  The output
+    is EXACTLY the broadcast strategy's; pick ``cell`` ≈ the median zone
+    bbox so fan-out stays O(1) per row.
     """
-    clip = clip.filter(F.expr(ring_area_positive_expr(c_ring, "spark")))
-    sxs = F.transform(F.col(s_ring), lambda p: p["x"])
-    sys_ = F.transform(F.col(s_ring), lambda p: p["y"])
-    cxs = F.transform(F.col(c_ring), lambda p: p["x"])
-    cys = F.transform(F.col(c_ring), lambda p: p["y"])
-    s_pre = subject.select(
-        F.col(sid),
-        F.col(s_ring).alias("_sr"),
-        F.array_min(sxs).alias("_sx0"),
-        F.array_max(sxs).alias("_sx1"),
-        F.array_min(sys_).alias("_sy0"),
-        F.array_max(sys_).alias("_sy1"),
-    )
-    c_pre = clip.select(
-        F.col(cid),
-        F.expr(ccw_ring_expr(c_ring, "spark")).alias("_cr"),
-        F.array_min(cxs).alias("_cx0"),
-        F.array_max(cxs).alias("_cx1"),
-        F.array_min(cys).alias("_cy0"),
-        F.array_max(cys).alias("_cy1"),
-    )
-    j = s_pre.crossJoin(F.broadcast(c_pre)).where(
-        (F.col("_sx0") <= F.col("_cx1"))
-        & (F.col("_cx0") <= F.col("_sx1"))
-        & (F.col("_sy0") <= F.col("_cy1"))
-        & (F.col("_cy0") <= F.col("_sy1"))
-    )
-    cur = "_sr"
-    for i, (ax, ay, bx, by) in enumerate(_edge_exprs("_cr", clip_k, "spark"), 1):
-        cur = halfplane_pass_expr(cur, ax, ay, bx, by, "spark", tag=f"o{i}")
-    j = j.withColumn("_rc", F.expr(cur))
+    j = _clipped(subject, clip, clip_k, sid, cid, s_ring, c_ring, cell=cell)
     area = F.expr(f"abs({shoelace2_expr('_rc', 'spark')}) / 2")
     q = 10 ** int(quant)
     qarea = F.floor(area * F.lit(float(q)) + F.lit(0.5)) / F.lit(float(q))
-    return (
-        j.filter(F.size(F.col("_rc")) >= 3)
-        .select(sid, cid, qarea.alias("inter_area"))
-        .filter(F.col("inter_area") > 0)
+    return j.select(sid, cid, qarea.alias("inter_area")).filter(F.col("inter_area") > 0)
+
+
+def _bbox_sql(r: str, px: str) -> str:
+    """DuckDB bbox select-list tail ``, … as {px}x0 … {px}y1`` of a ring."""
+    return "".join(
+        f", list_{m}(list_transform({r}, p -> p.{a})) as {px}{a}{i}"
+        for a in "xy"
+        for i, m in ((0, "min"), (1, "max"))
     )
+
+
+def _zones_sql(clip_sql: str, cid: str) -> str:
+    """Zone prep, DuckDB side (the twin of ``_zones``): ``clip_sql``
+    yields (cid, cr).  The guard filters the raw ring in the INNER
+    subquery, whose only ring column is the input's ``cr``; the CCW
+    ring is aliased one level up, so the guard can never bind to it."""
+    return (
+        f"select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr from "
+        f"(select {cid}, cr from ({clip_sql}) "
+        f"where {ring_area_positive_expr('cr', 'duckdb')})"
+    )
+
+
+def _pairs_sql(
+    subj_sql: str, clip_sql: str, sid: str, cid: str, cols: list[str], prefilter: bool = False
+) -> str:
+    """WITH-prefix ending in CTE ``pairs`` = (sid, *cols, cid, cr): each
+    subject row beside each prepped zone.  ``prefilter`` adds bbox
+    columns (subject ring ``r``) and the bbox-overlap WHERE."""
+    subj, zones, where = subj_sql, _zones_sql(clip_sql, cid), ""
+    if prefilter:
+        subj = f"select *{_bbox_sql('r', 's')} from ({subj_sql})"
+        zones = f"select *{_bbox_sql('cr', 'c')} from ({zones})"
+        where = (
+            "where s.sx0 <= c.cx1 and c.cx0 <= s.sx1"
+            " and s.sy0 <= c.cy1 and c.cy0 <= s.sy1"
+        )
+    s_cols = "".join(f", s.{c}" for c in cols)
+    return f"""
+      with subj as materialized ({subj}),
+      clipn as materialized ({zones}),
+      pairs as (select s.{sid}{s_cols}, c.{cid}, c.cr from subj s, clipn c {where})"""
 
 
 def overlay_area_sql(
@@ -250,53 +352,13 @@ def overlay_area_sql(
     interior overlap implies bbox overlap, so ``prefilter=True`` never
     drops a positive-area pair — use it when BOTH sides are fact-sized
     and the bare cross join would be millions of clip chains)."""
-    cur = "r"
-    for i, (ax, ay, bx, by) in enumerate(_edge_exprs("cr", clip_k, "duckdb"), 1):
-        cur = halfplane_pass_expr(cur, ax, ay, bx, by, "duckdb", tag=f"o{i}")
-    q = 10 ** int(quant)
-    if prefilter:
-        bb = (
-            ", list_min(list_transform({r}, p -> p.x)) as {px}x0"
-            ", list_max(list_transform({r}, p -> p.x)) as {px}x1"
-            ", list_min(list_transform({r}, p -> p.y)) as {px}y0"
-            ", list_max(list_transform({r}, p -> p.y)) as {px}y1"
-        )
-        subj_cte = (
-            f"subj as materialized (select {sid}, r"
-            + bb.format(r="r", px="s") + f" from ({subject_sql}))"
-        )
-        clipn_cte = (
-            f"clipn as materialized (select {cid}, cr"
-            + bb.format(r="cr", px="c")
-            + f" from (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr"
-            f" from clip0 where {ring_area_positive_expr('cr', 'duckdb')}))"
-        )
-        where = (
-            "where s.sx0 <= c.cx1 and c.cx0 <= s.sx1"
-            " and s.sy0 <= c.cy1 and c.cy0 <= s.sy1"
-        )
-        return f"""
-      with clip0 as materialized ({clip_sql}),
-      {subj_cte},
-      {clipn_cte},
-      pairs as (select s.{sid}, c.{cid}, s.r, c.cr from subj s, clipn c {where}),
-      clipped as (select {sid}, {cid}, {cur} as rc from pairs),
+    q = float(10 ** int(quant))
+    return _pairs_sql(subject_sql, clip_sql, sid, cid, ["r"], prefilter) + f""",
+      clipped as (select {sid}, {cid}, {_sh_chain('r', 'cr', clip_k, 'duckdb')} as rc
+                  from pairs),
       ar as (select {sid}, {cid},
-                    floor(abs({shoelace2_expr('rc', 'duckdb')}) / 2 * {float(q)!r} + 0.5)
-                      / {float(q)!r} as inter_area
-             from clipped where len(rc) >= 3)
-      select {sid}, {cid}, inter_area from ar where inter_area > 0
-    """
-    return f"""
-      with subj as materialized ({subject_sql}),
-      clip0 as materialized ({clip_sql}),
-      clipn as (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr from clip0
-                where {ring_area_positive_expr('cr', 'duckdb')}),
-      pairs as (select s.{sid}, c.{cid}, s.r, c.cr from subj s cross join clipn c),
-      clipped as (select {sid}, {cid}, {cur} as rc from pairs),
-      ar as (select {sid}, {cid},
-                    floor(abs({shoelace2_expr('rc', 'duckdb')}) / 2 * {float(q)!r} + 0.5)
-                      / {float(q)!r} as inter_area
+                    floor(abs({shoelace2_expr('rc', 'duckdb')}) / 2 * {q!r} + 0.5)
+                      / {q!r} as inter_area
              from clipped where len(rc) >= 3)
       select {sid}, {cid}, inter_area from ar where inter_area > 0
     """
@@ -330,52 +392,25 @@ def areal_interpolate(
     excluded (no defined share).  Same broadcast/zero-shuffle plan as
     overlay_area plus ONE aggregation shuffle keyed by zone.
     """
-    clip = clip.filter(F.expr(ring_area_positive_expr(c_ring, "spark")))
-    sxs = F.transform(F.col(s_ring), lambda p: p["x"])
-    sys_ = F.transform(F.col(s_ring), lambda p: p["y"])
-    cxs = F.transform(F.col(c_ring), lambda p: p["x"])
-    cys = F.transform(F.col(c_ring), lambda p: p["y"])
-    s_pre = subject.select(
-        F.col(sid),
-        F.col(value_col).cast("double").alias("_val"),
-        F.col(s_ring).alias("_sr"),
-        F.array_min(sxs).alias("_sx0"),
-        F.array_max(sxs).alias("_sx1"),
-        F.array_min(sys_).alias("_sy0"),
-        F.array_max(sys_).alias("_sy1"),
-    )
-    c_pre = clip.select(
-        F.col(cid),
-        F.expr(ccw_ring_expr(c_ring, "spark")).alias("_cr"),
-        F.array_min(cxs).alias("_cx0"),
-        F.array_max(cxs).alias("_cx1"),
-        F.array_min(cys).alias("_cy0"),
-        F.array_max(cys).alias("_cy1"),
-    )
-    j = s_pre.crossJoin(F.broadcast(c_pre)).where(
-        (F.col("_sx0") <= F.col("_cx1"))
-        & (F.col("_cx0") <= F.col("_sx1"))
-        & (F.col("_sy0") <= F.col("_cy1"))
-        & (F.col("_cy0") <= F.col("_sy1"))
-    )
-    cur = "_sr"
-    for i, (ax, ay, bx, by) in enumerate(_edge_exprs("_cr", clip_k, "spark"), 1):
-        cur = halfplane_pass_expr(cur, ax, ay, bx, by, "spark", tag=f"o{i}")
-    j = j.withColumn("_rc", F.expr(cur))
+    val = F.col(value_col).cast("double").alias("_val")
+    j = _clipped(subject, clip, clip_k, sid, cid, s_ring, c_ring, extra=(val,))
     ia = F.expr(f"abs({shoelace2_expr('_rc', 'spark')}) / 2")
     sa = F.expr(f"abs({shoelace2_expr('_sr', 'spark', tag='b')}) / 2")
-    micro = F.floor(F.col("_val") * (F.col("_ia") / F.col("_sa")) * F.lit(1e6) + F.lit(0.5)).cast(
-        "bigint"
-    )
+    return _value_totals(j.select(cid, "_val", ia.alias("_ia"), sa.alias("_sa")), cid, "_ia")
+
+
+def _value_totals(pairs: DataFrame, cid: str, ia: str) -> DataFrame:
+    """Close an areal interpolation: per pair, value · ia / area(subject)
+    (columns ``_val``, ``ia``, ``_sa``) floor-quantized to integer
+    micro-units, summed per zone.  Pairs without a positive ``ia`` or
+    subject area have no defined share."""
+    micro = F.floor(F.col("_val") * (F.col(ia) / F.col("_sa")) * F.lit(1e6) + F.lit(0.5))
     return (
-        j.filter(F.size(F.col("_rc")) >= 3)
-        .select(sid, cid, F.col("_val").alias("_val"), ia.alias("_ia"), sa.alias("_sa"))
-        .filter((F.col("_ia") > 0) & (F.col("_sa") > 0))
-        .select(sid, cid, micro.alias("_m"))
+        pairs.filter((F.col(ia) > 0) & (F.col("_sa") > 0))
         .groupBy(cid)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_parts"),
-            F.sum("_m").alias("value_micro_sum"),
+            F.sum(micro.cast("bigint")).alias("value_micro_sum"),
         )
     )
 
@@ -389,27 +424,22 @@ def areal_interpolate_sql(
 ) -> str:
     """DuckDB twin of areal_interpolate — ``subject_sql`` yields
     (sid, val, r); identical pass/fold/quantize op order."""
-    cur = "r"
-    for i, (ax, ay, bx, by) in enumerate(_edge_exprs("cr", clip_k, "duckdb"), 1):
-        cur = halfplane_pass_expr(cur, ax, ay, bx, by, "duckdb", tag=f"o{i}")
-    return f"""
-      with subj as materialized ({subject_sql}),
-      clip0 as materialized ({clip_sql}),
-      clipn as (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr from clip0
-                where {ring_area_positive_expr('cr', 'duckdb')}),
-      pairs as (select s.{sid}, c.{cid}, s.val, s.r, c.cr
-                from subj s cross join clipn c),
-      clipped as (select {sid}, {cid}, val, r, {cur} as rc from pairs),
+    return _pairs_sql(subject_sql, clip_sql, sid, cid, ["val", "r"]) + f""",
+      clipped as (select {sid}, {cid}, val, r,
+                         {_sh_chain('r', 'cr', clip_k, 'duckdb')} as rc from pairs),
       ar as (select {sid}, {cid}, val,
                     abs({shoelace2_expr('rc', 'duckdb')}) / 2 as ia,
                     abs({shoelace2_expr('r', 'duckdb', tag='b')}) / 2 as sa
-             from clipped where len(rc) >= 3),
-      mi as (select {cid},
-                    cast(floor(val * (ia / sa) * 1e6 + 0.5) as bigint) as m
-             from ar where ia > 0 and sa > 0)
+             from clipped where len(rc) >= 3)""" + _value_totals_sql("ar", cid, "ia")
+
+
+def _value_totals_sql(rel: str, cid: str, ia: str) -> str:
+    """DuckDB twin of ``_value_totals`` over ``rel`` (cid, val, ia, sa)."""
+    return f"""
       select {cid}, cast(count(*) as bigint) as n_parts,
-             cast(sum(m) as bigint) as value_micro_sum
-      from mi group by {cid}
+             cast(sum(cast(floor(val * ({ia} / sa) * 1e6 + 0.5) as bigint)) as bigint)
+               as value_micro_sum
+      from {rel} where {ia} > 0 and sa > 0 group by {cid}
     """
 
 
@@ -509,30 +539,16 @@ def zone_line_length(
     (bbox prefilter in the NLJ condition, then the t-window chain) —
     zero shuffle, zero Python, same 10¹²-row shape as overlay_area.
     """
-    clip = clip.filter(F.expr(ring_area_positive_expr(c_ring, "spark")))
-    cxs = F.transform(F.col(c_ring), lambda p: p["x"])
-    cys = F.transform(F.col(c_ring), lambda p: p["y"])
-    c_pre = clip.select(
-        F.col(cid),
-        F.expr(ccw_ring_expr(c_ring, "spark")).alias("_cr"),
-        F.array_min(cxs).alias("_cx0"),
-        F.array_max(cxs).alias("_cx1"),
-        F.array_min(cys).alias("_cy0"),
-        F.array_max(cys).alias("_cy1"),
-    )
     s_pre = segs.select(
-        F.col(sid),
-        F.col("x1").cast("double").alias("_x1"),
-        F.col("y1").cast("double").alias("_y1"),
-        F.col("x2").cast("double").alias("_x2"),
-        F.col("y2").cast("double").alias("_y2"),
+        F.col(sid), *[F.col(c).cast("double").alias(f"_{c}") for c in ("x1", "y1", "x2", "y2")]
+    ).select(
+        "*",
+        F.least("_x1", "_x2").alias("_sx0"),
+        F.greatest("_x1", "_x2").alias("_sx1"),
+        F.least("_y1", "_y2").alias("_sy0"),
+        F.greatest("_y1", "_y2").alias("_sy1"),
     )
-    j = s_pre.crossJoin(F.broadcast(c_pre)).where(
-        (F.least("_x1", "_x2") <= F.col("_cx1"))
-        & (F.col("_cx0") <= F.greatest("_x1", "_x2"))
-        & (F.least("_y1", "_y2") <= F.col("_cy1"))
-        & (F.col("_cy0") <= F.greatest("_y1", "_y2"))
-    )
+    j = _pairs(s_pre, _zones(clip, cid, c_ring))
     len_expr = _cyrus_beck_len_expr(
         "_x1", "_y1", "_x2", "_y2", _edge_exprs("_cr", clip_k, "spark"), "spark", quant
     )
@@ -556,78 +572,94 @@ def zone_line_length_sql(
     len_expr = _cyrus_beck_len_expr(
         "x1", "y1", "x2", "y2", _edge_exprs("cr", clip_k, "duckdb"), "duckdb", quant
     )
-    return f"""
-      with segs as materialized ({segs_sql}),
-      clip0 as materialized ({clip_sql}),
-      clipn as (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr from clip0
-                where {ring_area_positive_expr('cr', 'duckdb')}),
-      pairs as (select s.{sid}, c.{cid}, s.x1, s.y1, s.x2, s.y2, c.cr
-                from segs s cross join clipn c),
+    return _pairs_sql(segs_sql, clip_sql, sid, cid, ["x1", "y1", "x2", "y2"]) + f""",
       lens as (select {sid}, {cid}, {len_expr} as len_in from pairs)
       select {sid}, {cid}, len_in from lens where len_in > 0
     """
 
 
-def _signed_fan(clip: DataFrame, clip_k: int, cid: str, c_ring: str) -> DataFrame:
-    """CCW-normalize the zone ring (exact shoelace sign — a CW input
-    would flip every fan sign and the signed totals would come out
-    negative) and fan-explode it into its (k−2) triangles with
-    orientation signs.  Returns (cid, _tkey, _sgn, _tri): _tkey is the
-    composite 'cid#tix' key the convex-path call groups by, _sgn ∈
-    {+1, −1} (degenerate zero-area triangles are dropped — they
-    contribute nothing)."""
-    clip_n = clip.select(
-        F.col(cid), F.expr(ccw_ring_expr(c_ring, "spark", tag="gn")).alias("_crn")
-    )
+def _general(measure, subj: DataFrame, clip: DataFrame, clip_k: int, sid: str, cid: str,
+             c_ring: str, val_col: str, quant: int, **kw) -> DataFrame:
+    """Signed fan decomposition, Spark side: the prepped zone ring
+    fan-explodes into its (k−2) triangles with orientation signs
+    (degenerate zero-area triangles dropped — they contribute nothing),
+    ``measure`` (a convex op) runs on the triangles keyed 'cid#tix',
+    and the per-triangle results close as a signed sum of integer
+    micro-units (floor-form, NOT a bare cast — Spark's double→bigint
+    cast truncates where DuckDB's rounds half-even), keeping positive
+    totals, re-emitted at 10^-quant.  CCW first: a CW input would flip
+    every fan sign and the signed totals would come out negative."""
+    cr = F.col("_cr")
     tris = [
         F.struct(
             F.lit(i - 1).alias("tix"),
-            F.array(
-                F.element_at(F.col("_crn"), 1),
-                F.element_at(F.col("_crn"), i),
-                F.element_at(F.col("_crn"), i + 1),
-            ).alias("tri"),
+            F.array(F.element_at(cr, 1), F.element_at(cr, i), F.element_at(cr, i + 1)).alias(
+                "tri"
+            ),
         )
         for i in range(2, clip_k)
     ]
-    ct = clip_n.select(F.col(cid), F.explode(F.array(*tris)).alias("_t")).select(
-        cid, F.col("_t.tix").alias("_tix"), F.col("_t.tri").alias("_tri")
-    )
     sgn2 = shoelace2_expr("_tri", "spark", tag="g")
-    return (
-        ct.withColumn(
+    fan = (
+        _zones(clip, cid, c_ring)
+        .select(F.col(cid), F.explode(F.array(*tris)).alias("_t"))
+        .select(cid, F.col("_t.tix").alias("_tix"), F.col("_t.tri").alias("_tri"))
+        .withColumn(
             "_sgn",
-            F.expr(
-                f"case when {sgn2} > 0 then 1 when {sgn2} < 0 then -1 else 0 end"
-            ).cast("long"),
+            F.expr(f"case when {sgn2} > 0 then 1 when {sgn2} < 0 then -1 else 0 end").cast("long"),
         )
         .filter(F.col("_sgn") != 0)
         .withColumn(
-            "_tkey",
-            F.concat_ws("#", F.col(cid).cast("string"), F.col("_tix").cast("string")),
+            "_tkey", F.concat_ws("#", F.col(cid).cast("string"), F.col("_tix").cast("string"))
         )
     )
-
-
-def _signed_micro_sum(
-    pairs: DataFrame, fan: DataFrame, val_col: str, sid: str, cid: str, quant: int
-) -> DataFrame:
-    """Close a signed fan decomposition: join per-triangle results back
-    to their zone + sign, sum as integer micro-units (floor-form, NOT a
-    bare cast — Spark's double→bigint cast truncates where DuckDB's
-    rounds half-even), keep positive totals, re-emit at 10^-quant."""
-    q = float(10 ** int(quant))
-    micro = (
-        F.floor(F.col(val_col) * F.lit(q) + F.lit(0.5)).cast("bigint") * F.col("_sgn")
+    pairs = measure(
+        subj, fan.select("_tkey", F.col("_tri").alias(c_ring)), clip_k=3, sid=sid,
+        cid="_tkey", c_ring=c_ring, quant=quant, **kw,
     )
-    back = fan.select("_tkey", cid, "_sgn")
+    q = float(10 ** int(quant))
+    micro = F.floor(F.col(val_col) * F.lit(q) + F.lit(0.5)).cast("bigint") * F.col("_sgn")
     return (
-        pairs.join(F.broadcast(back), "_tkey")
+        pairs.join(F.broadcast(fan.select("_tkey", cid, "_sgn")), "_tkey")
         .groupBy(sid, cid)
         .agg(F.sum(micro).alias("_m"))
         .filter(F.col("_m") > 0)
         .select(sid, cid, (F.col("_m").cast("double") / F.lit(q)).alias(val_col))
     )
+
+
+def _general_sql(measure_sql, subj_sql: str, clip_sql: str, clip_k: int, sid: str, cid: str,
+                 val_col: str, quant: int) -> str:
+    """DuckDB twin of ``_general``: the same fan explode and signs over
+    the prepped zones, ``measure_sql`` on the triangle relation, and the
+    signed micro-unit sum."""
+    q = float(10 ** int(quant))
+    sgn2 = shoelace2_expr("tri", "duckdb", tag="g")
+    tri_rel = f"""
+      with clipg as materialized ({_zones_sql(clip_sql, cid)}),
+      fan as (select {cid}, i - 1 as tix, [cr[1], cr[i], cr[i + 1]] as tri
+              from clipg, unnest(generate_series(2, {int(clip_k)} - 1)) as u(i)),
+      sgn as (select {cid}, tix, tri,
+                     case when {sgn2} > 0 then 1 when {sgn2} < 0 then -1
+                          else 0 end as sgn
+              from fan)
+      select concat(cast({cid} as varchar), '#', cast(tix as varchar)) as cid,
+             tri as cr, {cid} as zone_id, sgn
+      from sgn where sgn <> 0
+    """
+    pair_sql = measure_sql(
+        subj_sql, f"select cid, cr from ({tri_rel})", clip_k=3, sid=sid, cid="cid", quant=quant
+    )
+    micro = f"cast(floor(p.{val_col} * {q!r} + 0.5) as bigint) * t.sgn"
+    return f"""
+      with tk as materialized ({tri_rel}),
+      pr as materialized ({pair_sql})
+      select p.{sid}, t.zone_id as {cid},
+             cast(sum({micro}) as double) / {q!r} as {val_col}
+      from pr p join tk t on p.cid = t.cid
+      group by p.{sid}, t.zone_id
+      having sum({micro}) > 0
+    """
 
 
 def overlay_area_general(
@@ -661,18 +693,9 @@ def overlay_area_general(
     form is its own oracle-pinned contract, not a bit-twin of the
     convex path.  ``clip_k`` is the EXACT zone vertex count, as before.
     """
-    ct = _signed_fan(clip, clip_k, cid, c_ring)
-    pairs = overlay_area(
-        subject,
-        ct.select("_tkey", F.col("_tri").alias(c_ring)),
-        clip_k=3,
-        sid=sid,
-        cid="_tkey",
-        s_ring=s_ring,
-        c_ring=c_ring,
-        quant=quant,
+    return _general(
+        overlay_area, subject, clip, clip_k, sid, cid, c_ring, "inter_area", quant, s_ring=s_ring
     )
-    return _signed_micro_sum(pairs, ct, "inter_area", sid, cid, quant)
 
 
 def overlay_area_general_sql(
@@ -686,40 +709,7 @@ def overlay_area_general_sql(
     """DuckDB twin of overlay_area_general: the same fan explode, sign,
     3-edge clip chain (via overlay_area_sql on the triangle relation),
     and signed micro-area sum."""
-    q = 10 ** int(quant)
-    sgn2 = shoelace2_expr("tri", "duckdb", tag="g")
-    tri_rel = f"""
-      with clipg0 as materialized ({clip_sql}),
-      clipg as (select {cid}, {ccw_ring_expr('cr', 'duckdb', tag='gn')} as cr
-                from clipg0),
-      fan as (select {cid}, i - 1 as tix, [cr[1], cr[i], cr[i + 1]] as tri
-              from clipg, unnest(generate_series(2, {int(clip_k)} - 1)) as u(i)),
-      sgn as (select {cid}, tix, tri,
-                     case when {sgn2} > 0 then 1 when {sgn2} < 0 then -1
-                          else 0 end as sgn
-              from fan)
-      select concat(cast({cid} as varchar), '#', cast(tix as varchar)) as cid,
-             tri as cr, {cid} as zone_id, sgn
-      from sgn where sgn <> 0
-    """
-    pair_sql = overlay_area_sql(
-        subject_sql,
-        f"select cid, cr from ({tri_rel})",
-        clip_k=3,
-        sid=sid,
-        cid="cid",
-        quant=quant,
-    )
-    return f"""
-      with tk as materialized ({tri_rel}),
-      pr as materialized ({pair_sql})
-      select p.{sid}, t.zone_id as {cid},
-             cast(sum(cast(floor(p.inter_area * {float(q)!r} + 0.5) as bigint)
-                      * t.sgn) as double) / {float(q)!r} as inter_area
-      from pr p join tk t on p.cid = t.cid
-      group by p.{sid}, t.zone_id
-      having sum(cast(floor(p.inter_area * {float(q)!r} + 0.5) as bigint) * t.sgn) > 0
-    """
+    return _general_sql(overlay_area_sql, subject_sql, clip_sql, clip_k, sid, cid, "inter_area", quant)
 
 
 def zone_line_length_general(
@@ -743,17 +733,7 @@ def zone_line_length_general(
     (sid, cid, len_in) for pairs with positive inside-length at
     10^-quant.
     """
-    ct = _signed_fan(clip, clip_k, cid, c_ring)
-    pairs = zone_line_length(
-        segs,
-        ct.select("_tkey", F.col("_tri").alias(c_ring)),
-        clip_k=3,
-        sid=sid,
-        cid="_tkey",
-        c_ring=c_ring,
-        quant=quant,
-    )
-    return _signed_micro_sum(pairs, ct, "len_in", sid, cid, quant)
+    return _general(zone_line_length, segs, clip, clip_k, sid, cid, c_ring, "len_in", quant)
 
 
 def zone_line_length_general_sql(
@@ -766,40 +746,8 @@ def zone_line_length_general_sql(
 ) -> str:
     """DuckDB twin of zone_line_length_general — the same fan/sign CTEs
     as overlay_area_general_sql over the Cyrus–Beck pair lengths."""
-    q = 10 ** int(quant)
-    sgn2 = shoelace2_expr("tri", "duckdb", tag="lg")
-    tri_rel = f"""
-      with clipg0 as materialized ({clip_sql}),
-      clipg as (select {cid}, {ccw_ring_expr('cr', 'duckdb', tag='ln')} as cr
-                from clipg0),
-      fan as (select {cid}, i - 1 as tix, [cr[1], cr[i], cr[i + 1]] as tri
-              from clipg, unnest(generate_series(2, {int(clip_k)} - 1)) as u(i)),
-      sgn as (select {cid}, tix, tri,
-                     case when {sgn2} > 0 then 1 when {sgn2} < 0 then -1
-                          else 0 end as sgn
-              from fan)
-      select concat(cast({cid} as varchar), '#', cast(tix as varchar)) as cid,
-             tri as cr, {cid} as zone_id, sgn
-      from sgn where sgn <> 0
-    """
-    pair_sql = zone_line_length_sql(
-        segs_sql,
-        f"select cid, cr from ({tri_rel})",
-        clip_k=3,
-        sid=sid,
-        cid="cid",
-        quant=quant,
-    )
-    return f"""
-      with tk as materialized ({tri_rel}),
-      pr as materialized ({pair_sql})
-      select p.{sid}, t.zone_id as {cid},
-             cast(sum(cast(floor(p.len_in * {float(q)!r} + 0.5) as bigint)
-                      * t.sgn) as double) / {float(q)!r} as len_in
-      from pr p join tk t on p.cid = t.cid
-      group by p.{sid}, t.zone_id
-      having sum(cast(floor(p.len_in * {float(q)!r} + 0.5) as bigint) * t.sgn) > 0
-    """
+    return _general_sql(zone_line_length_sql, segs_sql, clip_sql, clip_k, sid, cid, "len_in", quant)
+
 
 
 def areal_interpolate_general(
@@ -828,19 +776,8 @@ def areal_interpolate_general(
         F.col(sid),
         F.col(value_col).cast("double").alias("_val"),
         F.expr(f"abs({sa2}) / 2").alias("_sa"),
-    ).filter(F.col("_sa") > 0)
-    j = inter.join(sv, sid)
-    micro = F.floor(
-        F.col("_val") * (F.col("inter_area") / F.col("_sa")) * F.lit(1e6) + F.lit(0.5)
-    ).cast("bigint")
-    return (
-        j.select(sid, cid, micro.alias("_m"))
-        .groupBy(cid)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_parts"),
-            F.sum("_m").alias("value_micro_sum"),
-        )
     )
+    return _value_totals(inter.join(sv, sid), cid, "inter_area")
 
 
 def areal_interpolate_general_sql(
@@ -859,99 +796,6 @@ def areal_interpolate_general_sql(
     return f"""
       with subj0 as materialized ({subject_sql}),
       inter as materialized ({inner}),
-      sv as (select {sid}, val, abs({sa2}) / 2 as sa from subj0),
-      mi as (select i.{cid},
-                    cast(floor(s.val * (i.inter_area / s.sa) * 1e6 + 0.5)
-                         as bigint) as m
-             from inter i join sv s using ({sid})
-             where s.sa > 0)
-      select {cid}, cast(count(*) as bigint) as n_parts,
-             cast(sum(m) as bigint) as value_micro_sum
-      from mi group by {cid}
-    """
-
-
-def overlay_area_big(
-    subject: DataFrame,
-    clip: DataFrame,
-    clip_k: int,
-    cell: int,
-    sid: str = "sid",
-    cid: str = "cid",
-    s_ring: str = "ring",
-    c_ring: str = "cring",
-    quant: int = 3,
-) -> DataFrame:
-    """Big-big overlay — when the zone layer is ALSO fact-sized (parcel/
-    building footprints at 10¹² scale) and cannot broadcast: both sides
-    cover their ring bbox with ``cell``-sized grid cells (map-side
-    sequence explode), ONE shuffle equi-join on the (gx, gy) cell key
-    (AQE splits dense-city skew cells), then the identical clip chain.
-
-    Exactly-once with NO distinct-shuffle: a pair sharing k>1 cells
-    keeps only the cell containing the (min-x, min-y) corner of the
-    bbox INTERSECTION — that corner lies in both bboxes, hence in both
-    covers (the crossing_segments_join NW-cell rule generalized to
-    area pairs).  Output and semantics are EXACTLY overlay_area's; the
-    blocking is a plan choice, so the broadcast variant (or a plain
-    cross-join oracle) is its correctness twin.
-
-    The grid key is a plain (gx, gy) int pair — deliberately NOT the
-    engine's packed tile id, whose 12-bit row/col caps zoom at 12;
-    pick ``cell`` ≈ the median zone bbox so fan-out stays O(1) per row.
-    """
-    def pre(df, idc, ring, px):
-        xs = F.transform(F.col(ring), lambda p: p["x"])
-        ys = F.transform(F.col(ring), lambda p: p["y"])
-        out = df.select(
-            F.col(idc),
-            F.col(ring).alias(f"_{px}r"),
-            F.array_min(xs).alias(f"_{px}x0"),
-            F.array_max(xs).alias(f"_{px}x1"),
-            F.array_min(ys).alias(f"_{px}y0"),
-            F.array_max(ys).alias(f"_{px}y1"),
-        )
-        c = F.lit(float(cell))
-        return out.withColumn(
-            "_gx", F.explode(F.sequence(
-                F.floor(F.col(f"_{px}x0") / c).cast("long"),
-                F.floor(F.col(f"_{px}x1") / c).cast("long"),
-            ))
-        ).withColumn(
-            "_gy", F.explode(F.sequence(
-                F.floor(F.col(f"_{px}y0") / c).cast("long"),
-                F.floor(F.col(f"_{px}y1") / c).cast("long"),
-            ))
-        )
-
-    s_pre = pre(subject, sid, s_ring, "s")
-    c_pre = pre(
-        clip.select(
-            F.col(cid), F.expr(ccw_ring_expr(c_ring, "spark", tag="bb")).alias(c_ring)
-        ),
-        cid,
-        c_ring,
-        "c",
-    )
-    j = s_pre.join(c_pre, ["_gx", "_gy"]).where(
-        (F.col("_sx0") <= F.col("_cx1"))
-        & (F.col("_cx0") <= F.col("_sx1"))
-        & (F.col("_sy0") <= F.col("_cy1"))
-        & (F.col("_cy0") <= F.col("_sy1"))
-    )
-    c = F.lit(float(cell))
-    nw_gx = F.floor(F.greatest("_sx0", "_cx0") / c).cast("long")
-    nw_gy = F.floor(F.greatest("_sy0", "_cy0") / c).cast("long")
-    j = j.filter((F.col("_gx") == nw_gx) & (F.col("_gy") == nw_gy))
-    cur = "_sr"
-    for i, (ax, ay, bx, by) in enumerate(_edge_exprs("_cr", clip_k, "spark"), 1):
-        cur = halfplane_pass_expr(cur, ax, ay, bx, by, "spark", tag=f"o{i}")
-    j = j.withColumn("_rc", F.expr(cur))
-    area = F.expr(f"abs({shoelace2_expr('_rc', 'spark')}) / 2")
-    q = 10 ** int(quant)
-    qarea = F.floor(area * F.lit(float(q)) + F.lit(0.5)) / F.lit(float(q))
-    return (
-        j.filter(F.size(F.col("_rc")) >= 3)
-        .select(sid, cid, qarea.alias("inter_area"))
-        .filter(F.col("inter_area") > 0)
+      sv as (select {sid}, val, abs({sa2}) / 2 as sa from subj0)""" + _value_totals_sql(
+        f"inter join sv using ({sid})", cid, "inter_area"
     )

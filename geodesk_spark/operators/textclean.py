@@ -418,6 +418,10 @@ def bpe_train(
     ).alias("word")
     vocab = (
         df.select(words)
+        # tab/newline-edged text (the trim strips spaces only) splits to a
+        # boundary '' word; sequence(1, 0) DESCENDS, so it would enter the
+        # pair counts as a phantom ('', '') pair
+        .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn(

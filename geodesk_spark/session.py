@@ -24,7 +24,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     b = (

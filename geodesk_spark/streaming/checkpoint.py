@@ -460,12 +460,13 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
     os.makedirs(out, exist_ok=True)
     # The vector is O(deleted rows): hash-partition it by data file so a
     # mass delete (10% of 10^12 rows) spreads over the cluster instead of
-    # funnelling through one task / one parquet file.  No explicit
-    # partition count — AQE's coalescePartitions folds a small vector
-    # back to ~1 file, so the common-case manifest stays compact.
-    new_dels.repartition(F.col("file")).write.mode("overwrite").parquet(
-        _deletes_dir(out)
-    )
+    # funnelling through one task / one parquet file.  Hash-by-file can
+    # fill at most one partition per data file, so the snapshot's file
+    # count caps the partitions (and the delete files) without relying
+    # on AQE coalescing.
+    new_dels.repartition(max(len(parts), 1), F.col("file")).write.mode(
+        "overwrite"
+    ).parquet(_deletes_dir(out))
     n_deleted = sum(
         r["rows"]
         for r in _file_manifest(_parquet_files(_deletes_dir(out)), _deletes_dir(out))

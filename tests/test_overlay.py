@@ -394,8 +394,8 @@ def test_areal_interpolate_general_hand(spark):
 
 
 def test_overlay_big_equals_broadcast(spark):
-    """The cell-blocked big-big overlay must return EXACTLY the broadcast
-    variant's rows — same pairs (exactly-once despite multi-cell
+    """The cell-blocked big-big strategy must return EXACTLY the broadcast
+    strategy's rows — same pairs (exactly-once despite multi-cell
     sharing), same quantized areas — across cell sizes straddling the
     geometry scale."""
     rng = np.random.default_rng(23)
@@ -410,6 +410,7 @@ def test_overlay_big_equals_broadcast(spark):
         r = rng.uniform(4, 10)
         cx, cy = rng.uniform(-25, 25, 2)
         clips.append((100 + c, _ring(*[(cx + r * np.cos(a), cy + r * np.sin(a)) for a in ang])))
+    clips.append((200, _ring((-30, -30), (0, 0), (30, 30), (10, 10))))  # degenerate: collinear
     subj = spark.createDataFrame(subs, "sid long, ring array<struct<x:double,y:double>>")
     clip = spark.createDataFrame(clips, "cid long, cring array<struct<x:double,y:double>>")
     want = sorted(
@@ -418,7 +419,7 @@ def test_overlay_big_equals_broadcast(spark):
     )
     assert want  # fixture sanity: some overlaps exist
     for cell in (4, 16, 64):  # smaller, comparable, larger than the shapes
-        rows = overlay.overlay_area_big(subj, clip, clip_k=4, cell=cell).collect()
+        rows = overlay.overlay_area(subj, clip, clip_k=4, cell=cell).collect()
         got = sorted((r.sid, r.cid, r.inter_area) for r in rows)
         assert len(rows) == len({(r.sid, r.cid) for r in rows}), f"dups at cell={cell}"
         assert got == want, f"cell={cell}"
@@ -431,8 +432,9 @@ def test_degenerate_zone_contributes_nothing(spark):
     (cross = 0 keeps everything), so before the zone guard it
     "contained" whatever survived the bbox prefilter and the two
     engines disagreed on row membership.  Pin the fixed semantics on
-    ALL THREE convex ops: degenerate zones yield zero rows, valid
-    zones in the same frame are untouched."""
+    every overlay path of both engines — the convex ops, the ``cell``
+    strategy, the general (fan) ops: degenerate zones yield zero rows,
+    valid zones in the same frame are untouched."""
     import duckdb
 
     subj = spark.createDataFrame(
@@ -456,12 +458,30 @@ def test_degenerate_zone_contributes_nothing(spark):
         for r in overlay.overlay_area(subj, clip, clip_k=4).collect()
     }
     assert got_area == {(1, 102): 16.0}
+    for cell in (1, 64):  # finer than / coarser than the zones
+        got_cell = {
+            (r.sid, r.cid): r.inter_area
+            for r in overlay.overlay_area(subj, clip, clip_k=4, cell=cell).collect()
+        }
+        assert got_cell == got_area, f"cell={cell}"
+    got_gen = {
+        (r.sid, r.cid): r.inter_area
+        for r in overlay.overlay_area_general(subj, clip, clip_k=4).collect()
+    }
+    assert got_gen == got_area
     got_len = {
         (r.seg_id, r.cid) for r in overlay.zone_line_length(segs, clip, 4).collect()
     }
     assert got_len == {(1, 102)}
+    got_len_gen = {
+        (r.seg_id, r.cid)
+        for r in overlay.zone_line_length_general(segs, clip, 4).collect()
+    }
+    assert got_len_gen == {(1, 102)}
     got_ai = overlay.areal_interpolate(subj, clip, 4, value_col="sid").collect()
     assert {r.cid for r in got_ai} == {102}
+    got_ai_gen = overlay.areal_interpolate_general(subj, clip, 4, value_col="sid").collect()
+    assert {r.cid for r in got_ai_gen} == {102}
 
     # and the SQL twins drop the same zones (engine-parity on the guard)
     clip_sql = " union all ".join(
@@ -480,3 +500,18 @@ def test_degenerate_zone_contributes_nothing(spark):
         overlay.zone_line_length_sql(segs_sql, clip_sql, clip_k=4)
     ).fetchall()
     assert {(r[0], r[1]) for r in want} == {(1, 102)}
+    sq = "[" + ", ".join(
+        f"{{'x': {float(x)!r}, 'y': {float(y)!r}}}" for x, y in [(0, 0), (10, 0), (10, 10), (0, 10)]
+    ) + "]::struct(x double, y double)[]"
+    subject_sql = f"select 1 as sid, {sq} as r"
+    for prefilter in (False, True):
+        want = duckdb.sql(
+            overlay.overlay_area_sql(subject_sql, clip_sql, clip_k=4, prefilter=prefilter)
+        ).fetchall()
+        assert want == [(1, 102, 16.0)], f"prefilter={prefilter}"
+    want = duckdb.sql(
+        overlay.areal_interpolate_sql(
+            f"select 1 as sid, cast(1 as double) as val, {sq} as r", clip_sql, clip_k=4
+        )
+    ).fetchall()
+    assert [r[0] for r in want] == [102]

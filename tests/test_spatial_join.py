@@ -427,3 +427,31 @@ def test_flagship_plan_shape_regression(spark, tmp_path):
         assert py_node not in nodes, py_node
     # the projection must prune to the three columns the kernel needs
     assert re.search(r"ReadSchema: struct<image_id:string,lon:double,lat:double>", plan)
+
+
+def test_overlay_plan_shape(spark):
+    """Pin overlay_area's plan claims (operators/overlay.py): the
+    broadcast strategy is a BroadcastNestedLoopJoin with ZERO shuffle
+    Exchange and no Python node; the ``cell`` strategy is an equi-join
+    on the grid key (no nested loop), with no Python node either."""
+    import re
+
+    from geodesk_spark.operators import overlay
+
+    ring = "array<struct<x:double,y:double>>"
+    sq = [{"x": float(x), "y": float(y)} for x, y in ((0, 0), (4, 0), (4, 4), (0, 4))]
+    subj = spark.createDataFrame([(i, sq) for i in range(4)], f"sid long, ring {ring}")
+    clip = spark.createDataFrame([(i, sq) for i in range(2)], f"cid long, cring {ring}")
+
+    def nodes(df):
+        plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        return set(re.findall(r"\(\d+\) ([A-Za-z]+)", plan))
+
+    py_nodes = {"BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"}
+    bc = nodes(overlay.overlay_area(subj, clip, clip_k=4))
+    assert "BroadcastNestedLoopJoin" in bc
+    assert "Exchange" not in bc  # shuffle-free: only BroadcastExchange
+    assert not bc & py_nodes
+    cell = nodes(overlay.overlay_area(subj, clip, clip_k=4, cell=2))
+    assert "BroadcastNestedLoopJoin" not in cell
+    assert not cell & py_nodes

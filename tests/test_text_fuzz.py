@@ -6,7 +6,7 @@ against its DuckDB oracle twin.  Few examples, whole-corpus per example
 
 import duckdb
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from geodesk_spark.operators import dedup, text, textclean
 
@@ -116,13 +116,16 @@ def test_fuzz_gopher_quality_parity(spark, docs):
 @given(docs=st.lists(st.lists(st.text(alphabet="ab", min_size=1, max_size=5),
                               min_size=0, max_size=6).map(" ".join),
                      min_size=1, max_size=6))
+@example(docs=["\tab ab", "ba ab"])  # tab-edged: the space-only trim keeps a '' word
+@example(docs=["ab ba\n", "ab"])  # newline-edged, same trap at the end
 def test_fuzz_bpe_train_parity(spark, docs):
     """bpe_train merge lists + final segmentations match the Python
     Sennrich reference on adversarial two-letter corpora (maximal
-    overlapping-merge chains)."""
+    overlapping-merge chains); the merge list also matches the
+    bpe_train_sql oracle."""
     from tests.test_textclean import _bpe_reference
 
-    sdf, _ = _frames(spark, docs)
+    sdf, con = _frames(spark, docs)
     from geodesk_spark.operators import textclean as tc
 
     mdf, vdf = tc.bpe_train(sdf, n_merges=4)
@@ -130,6 +133,7 @@ def test_fuzz_bpe_train_parity(spark, docs):
                   for r in mdf.orderBy("rank").collect()]
     want_merges, want_segs, want_vocab = _bpe_reference(docs, 4)
     assert got_merges == want_merges
+    assert con.sql(tc.bpe_train_sql("documents", n_merges=4)).fetchall() == want_merges
     got = {r.word: (r.cnt, list(r.seg)) for r in vdf.collect()}
     assert got == {w: (want_vocab[w], want_segs[w]) for w in want_vocab}
 
