@@ -269,10 +269,10 @@ def _hex_grid_layer() -> list[tuple[str, np.ndarray]]:
 
 def _q_pip_partitioned(spark, sf_dir):
     """containing(point) with a DataFrame layer — the shuffle big-big
-    path (operators/bigjoin.py): distributed Arrow layer prep, cell-id
-    shuffle equi-join, exact ray-cast fold over a segment COLUMN (no
-    broadcast, no plan literals).  Same three-band semantics as pip_join
-    (Filter.filterForTile, FastTileFilter.java:40-60)."""
+    path (operators/bigjoin.py): distributed Arrow layer prep, then the
+    same join body as pip_join (spatial_join._pip_join) without the
+    broadcast hints — cell-id equi-join, segment-column equi-join, exact
+    ray-cast fold (Filter.filterForTile, FastTileFilter.java:40-60)."""
     from geodesk_spark.operators import bigjoin
 
     df = _derived_orders(spark, sf_dir).withColumn("x", F.col("x").cast("int")).withColumn(

@@ -1,50 +1,43 @@
 """Shuffle (big-big) point-in-polygon join — the non-broadcast scale path.
 
 The flagship ``spatial_join.contains_points`` assumes a dimension-sized
-polygon layer: bands broadcast, segments either plan literals or a
-driver-held broadcast variable.  That is the right plan for the
-reference's typical query shape (a handful of query polygons,
-ContainsPointFilter.java:26-72), but at 100 TB the layer itself can be a
-fact table — every building footprint on Earth is ~10^9 polygons, far
-past any broadcast threshold, and nothing may ever touch the driver.
+polygon layer: its band table and segment arrays are built on the driver
+and broadcast.  That is the right plan for the reference's typical query
+shape (a handful of query polygons, ContainsPointFilter.java:26-72), but
+at 100 TB the layer itself can be a fact table — every building
+footprint on Earth is ~10^9 polygons, far past any broadcast threshold,
+and nothing may ever touch the driver.
 
-This module keeps the SAME three-band semantics (interior cells waive
-the exact test, boundary cells take it, everything else prunes —
-Filter.filterForTile, FastTileFilter.java:40-60) but makes every stage
-distributed:
+``contains_points_big`` runs the SAME join body
+(``spatial_join._pip_join``: interior cells waive the exact test,
+boundary cells take it, everything else prunes — Filter.filterForTile,
+FastTileFilter.java:40-60); only the inputs differ:
 
 1. **Layer preparation is a parallel Arrow pass**, not driver work:
    ``layer_bands`` runs the adaptive quadtree classifier
    (``spatial_join._quadtree_bands``) per polygon inside ``mapInPandas``
-   over the layer DataFrame, emitting (cell, poly_id, band) rows.  A
+   over the layer DataFrame, emitting (cell, poly_id, band) rows, and
+   ``layer_segments`` emits each polygon's segment array.  A
    10^9-polygon layer prepares at full cluster parallelism.
-2. **The candidate join is a shuffle equi-join on the cell id** — both
-   sides repartition by cell; no broadcast required (AQE may still
-   elect a broadcast when the prepared layer turns out small, which is
-   strictly a win and changes nothing semantically).  The probe side
-   explodes exactly one cell id per SHARED quadtree level {4,8,12,16}
-   (see ``_quadtree_bands``: every polygon's bands land on that fixed
-   level set), so probe fan-out is 4 rows/point regardless of layer
-   size or polygon size mix.
-3. **The exact ray-cast is the same 100% whole-stage-codegen fold as
-   the flagship**, but over a segment-array COLUMN fetched by a second
-   equi-join on poly_id — geometry arrives as data, never as plan
-   literals, so Catalyst plan size and codegen method size stay O(1) in
-   the layer (the broadcast path's JVM_SEG_BUDGET ceiling does not
-   exist here).  Only BOUNDARY-band candidates take this join; INTERIOR
-   matches bypass it entirely.
+2. **No broadcast hints** — both joins (probe cell ⋈ band cell, then
+   ⋈ segments on poly_id) are plain equi-joins, so Spark shuffles them
+   (AQE may still elect a broadcast when the prepared layer turns out
+   small, which is strictly a win and changes nothing semantically).
+   The probe side explodes exactly one cell id per SHARED quadtree level
+   {4,8,12,16} (see ``_quadtree_bands``: every polygon's bands land on
+   that fixed level set), so probe fan-out is 4 rows/point regardless of
+   layer size or polygon size mix.
 
-Skew note: the boundary⋈segments join keys on poly_id, so one enormous
-polygon with millions of boundary candidates is a hot key — exactly the
-shape AQE's skew-join splitting handles (enabled in session.py), and
-the adaptive quadtree already bounds boundary-band *width* per polygon
-(max_cells), which bounds the duplication factor.
+Skew note: the segments join keys on poly_id, so one enormous polygon
+with millions of candidates is a hot key — exactly the shape AQE's
+skew-join splitting handles (enabled in session.py), and the adaptive
+quadtree already bounds band *width* per polygon (max_cells), which
+bounds the duplication factor.
 
 A point lies in at most one quadtree leaf of a given polygon (the
 adaptive refinement partitions the bbox disjointly across its mixed
 levels), so the cell join yields at most one candidate row per
-(point, polygon) — no post-join dedup is needed, identical to the
-broadcast path's argument.
+(point, polygon) — no post-join dedup is needed.
 """
 
 from __future__ import annotations
@@ -54,27 +47,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from geodesk_spark.geo import pip
-from geodesk_spark.geo import tile as T
 from geodesk_spark.operators.spatial_join import (
-    BOUNDARY,
-    INTERIOR,
+    _SEG_SCHEMA,
+    _pip_join,
     _quadtree_bands,
+    _segment_pdf,
+    _zip_segments,
 )
 
 #: The fixed quadtree level set every polygon's bands land on
 #: (spatial_join._quadtree_bands snaps bases to multiples of 4 and
 #: refines in steps of 4).
 SHARED_LEVELS = (4, 8, 12, 16)
-
-
-def _cell_expr(zoom: int):
-    """Point's quadtree cell id at ``zoom`` — pure JVM bit arithmetic,
-    identical packing to spatial_join._cell_ids: (zoom<<40)|(row<<20)|col."""
-    return (
-        F.lit(zoom << 40).cast("long")
-        + F.shiftleft(T.row_from_y_col(F.col("y"), zoom).cast("long"), 20)
-        + T.column_from_x_col(F.col("x"), zoom).cast("long")
-    )
 
 
 def layer_bands(polygons: DataFrame) -> DataFrame:
@@ -117,39 +101,20 @@ def layer_bands(polygons: DataFrame) -> DataFrame:
 def layer_segments(polygons: DataFrame) -> DataFrame:
     """(poly_id, rings binary) → (poly_id, segs array<struct<x1,y1,x2,y2>>).
 
-    Segments are emitted as four parallel double arrays (columnar through
-    Arrow) and zipped JVM-side — the exact-test fold then runs on a plain
-    column, keeping plan size independent of the layer.  All rings'
-    segments concatenate into one array: crossing parity over the union
-    of rings == XOR of per-ring parities (PointInPolygon.java:21-23).
+    Segments leave Arrow as four parallel double arrays and are zipped
+    JVM-side — the same frame shape ``spatial_join.contains_points``
+    builds on the driver, so the exact-test fold runs on a plain column
+    and plan size stays independent of the layer.
     """
 
     def gen(batches):
         for pdf in batches:
-            rows = []
-            for pid, blob in zip(pdf["poly_id"], pdf["rings"]):
-                rings = pip.unpack_rings(bytes(blob))
-                a = np.concatenate(
-                    [np.concatenate([r[:-1], r[1:]], axis=1) for r in rings], axis=0
-                )
-                rows.append(
-                    (pid, a[:, 0].tolist(), a[:, 1].tolist(), a[:, 2].tolist(), a[:, 3].tolist())
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["poly_id", "x1", "y1", "x2", "y2"]
+            if len(pdf):
+                yield _segment_pdf(
+                    pdf["poly_id"], [pip.unpack_rings(bytes(b)) for b in pdf["rings"]]
                 )
 
-    cols = polygons.mapInPandas(
-        gen,
-        schema=(
-            "poly_id string, x1 array<double>, y1 array<double>, "
-            "x2 array<double>, y2 array<double>"
-        ),
-    )
-    return cols.select(
-        "poly_id", F.arrays_zip("x1", "y1", "x2", "y2").alias("segs")
-    )
+    return _zip_segments(polygons.mapInPandas(gen, schema=_SEG_SCHEMA))
 
 
 def contains_points_big(
@@ -166,47 +131,42 @@ def contains_points_big(
     Returns (keep_cols…, poly_id) match rows (or, with ``anti=True``,
     the points matching NO polygon — keep_cols must identify a row).
     Results are identical to ``spatial_join.contains_points`` on the same
-    layer (pinned in tests/test_bigjoin.py); only the physical plan
-    differs: shuffle joins instead of broadcast, Arrow layer prep instead
-    of driver prep, segment column instead of plan literals.
+    layer (pinned in tests/test_bigjoin.py): both run ``_pip_join``; this
+    one feeds it distributed layer prep and no broadcast hints.
     """
-    keep = keep_cols or [c for c in points.columns if c not in ("x", "y")]
-    bands = layer_bands(polygons)
-    segs = layer_segments(polygons)
-
-    probe = points.withColumn(
-        "_cell", F.explode(F.array(*[_cell_expr(z) for z in SHARED_LEVELS]))
+    return _pip_join(
+        points, layer_bands(polygons), layer_segments(polygons), SHARED_LEVELS, keep_cols, anti
     )
-    j = probe.join(bands, probe["_cell"] == bands["cell"])
 
-    interior = j.filter(F.col("band") == INTERIOR).select(*keep, "poly_id")
 
-    boundary = (
-        j.filter(F.col("band") == BOUNDARY)
-        .select(*keep, "x", "y", "poly_id")
-        .join(segs, "poly_id")
+def _proper_crossing(zoom: int):
+    """Proper-crossing test between the ``a{x1,y1,x2,y2}`` and
+    ``b{x1,y1,x2,y2}`` segment columns of a cell-join row →
+    (proper, t, ix, iy, icell).  The orientation determinants are exact
+    int64; t = d1/(d1−d2) is the only float; ``icell`` is the ``zoom``
+    cell holding the intersection point — the one cell that keeps the
+    pair (the exactly-once rule of both crossing joins below)."""
+    from geodesk_spark.operators.tiling import cover_cell_col
+
+    ax1, ay1, ax2, ay2 = (F.col(f"a{c}") for c in ("x1", "y1", "x2", "y2"))
+    bx1, by1, bx2, by2 = (F.col(f"b{c}") for c in ("x1", "y1", "x2", "y2"))
+    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
+    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
+    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
+    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
+    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
+        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
     )
-    xd = F.col("x").cast("double")
-    yd = F.col("y").cast("double")
-
-    def _crosses(sg):
-        c = ((sg["y1"] <= yd) & (sg["y2"] > yd)) | (
-            (sg["y1"] > yd) & (sg["y2"] <= yd)
-        )
-        return c & (
-            xd
-            < sg["x1"] + (yd - sg["y1"]) / (sg["y2"] - sg["y1"]) * (sg["x2"] - sg["x1"])
-        )
-
-    ncross = F.size(F.filter(F.col("segs"), _crosses))
-    exact = boundary.filter(ncross % 2 == 1).select(*keep, "poly_id")
-
-    matches = interior.unionByName(exact)
-    if not anti:
-        return matches
-    return points.select(*keep).join(
-        matches.select(*keep).distinct(), keep, "left_anti"
+    step = 1 << (32 - zoom)
+    t = d1 / (d1 - d2)
+    ix = ax1 + t * (ax2 - ax1)
+    iy = ay1 + t * (ay2 - ay1)
+    icell = cover_cell_col(
+        zoom,
+        F.floor((F.lit(2147483647) - iy) / F.lit(step)),
+        F.floor((ix + F.lit(2147483648)) / F.lit(step)),
     )
+    return proper, t, ix, iy, icell
 
 
 def crossing_segments_join(
@@ -238,9 +198,7 @@ def crossing_segments_join(
        both covers) — the NW-flag exactly-once rule generalized to
        pair joins (tiling.nw_dedup_filter, SURVEY §2.1).
     """
-    from geodesk_spark.operators.tiling import cover_cell_col, explode_cover
-
-    step = 1 << (32 - zoom)
+    from geodesk_spark.operators.tiling import explode_cover
 
     def cover(df, idc, prefix):
         cov = explode_cover(df.select(idc, "x1", "y1", "x2", "y2"), zoom)
@@ -251,24 +209,7 @@ def crossing_segments_join(
     cb = cover(b, b_id, "b")
     j = ca.join(cb, "cell")
 
-    ax1, ay1, ax2, ay2 = (F.col(f"a{c}") for c in ("x1", "y1", "x2", "y2"))
-    bx1, by1, bx2, by2 = (F.col(f"b{c}") for c in ("x1", "y1", "x2", "y2"))
-    # orientation determinants, exact int64
-    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
-        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
-    )
-    t = d1 / (d1 - d2)
-    ix = ax1 + t * (ax2 - ax1)
-    iy = ay1 + t * (ay2 - ay1)
-    icell = cover_cell_col(
-        zoom,
-        F.floor((F.lit(2147483647) - iy) / F.lit(step)),
-        F.floor((ix + F.lit(2147483648)) / F.lit(step)),
-    )
+    proper, t, ix, iy, icell = _proper_crossing(zoom)
     return (
         j.filter(proper)
         .withColumn("t", t)
@@ -307,7 +248,7 @@ def ring_self_intersections(
     tests are exact int64 while segment extents stay < 2²⁸ (the module
     contract above).
     """
-    from geodesk_spark.operators.tiling import cover_cell_col, explode_cover
+    from geodesk_spark.operators.tiling import explode_cover
 
     xs = F.col(xs_col)
     ys = F.col(ys_col)
@@ -345,24 +286,7 @@ def ring_self_intersections(
         & ~((F.col("i") == 0) & (F.col("j") == F.col("_n") - 1))
     )
 
-    ax1, ay1, ax2, ay2 = (F.col(f"a{c}") for c in ("x1", "y1", "x2", "y2"))
-    bx1, by1, bx2, by2 = (F.col(f"b{c}") for c in ("x1", "y1", "x2", "y2"))
-    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
-        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
-    )
-    step = 1 << (32 - zoom)
-    t = d1 / (d1 - d2)
-    ix = ax1 + t * (ax2 - ax1)
-    iy = ay1 + t * (ay2 - ay1)
-    icell = cover_cell_col(
-        zoom,
-        F.floor((F.lit(2147483647) - iy) / F.lit(step)),
-        F.floor((ix + F.lit(2147483648)) / F.lit(step)),
-    )
+    proper, _, _, _, icell = _proper_crossing(zoom)
     return (
         j.filter(proper)
         .filter(F.col("cell") == icell)

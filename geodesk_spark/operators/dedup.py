@@ -55,15 +55,6 @@ def minhash_from_hashes(hh: Column, j: int) -> Column:
     return F.array_min(F.transform(hh, lambda h: F.substring(h, 1 + 8 * j, 8)))
 
 
-def minhash_sig_cols(text: Column) -> list[Column]:
-    """N_MINHASH independent minwise hashes via slice-of-md5 (above).
-
-    NB: transform lambdas must take exactly ONE parameter — PySpark binds
-    a second parameter to the array index, silently shadowing closures."""
-    hh = shingle_hash_col(shingles_col(text))
-    return [minhash_from_hashes(hh, j).alias(f"mh{j}") for j in range(N_MINHASH)]
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate groups by normalized-text md5; keeps the min doc_id
     as the canonical representative (hash-groupBy — one shuffle)."""

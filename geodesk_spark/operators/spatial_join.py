@@ -9,11 +9,14 @@ Replicates the reference's tile-accelerated predicate evaluation
   *disjoint* (prune), *interior* (waive the geometry test) or
   *boundary* (full test);
 - here, each broadcast polygon carries a precomputed tile
-  classification at an adaptive zoom, and the join is ONE narrow
-  ``mapInPandas`` pass over the point table: no shuffle, no UDF row
-  loop — per Arrow batch, candidate masks are pure numpy
-  (bbox compare → int tile lookup → vectorized ray-cast PIP for the
-  boundary band only).
+  classification at an adaptive zoom, and the join is ONE pass over the
+  point table inside whole-stage codegen: the point's cell id per
+  classification zoom probes a broadcast (cell, poly_id, band) table, a
+  second broadcast hash join on poly_id fetches the polygon's segment
+  array, and the exact ray-cast runs as a higher-order fold on
+  BOUNDARY-band rows only.  No shuffle, no Python worker, and geometry
+  travels as data — never as plan literals — so the plan is the same
+  size for a 4-gon and a coastline.
 
 At 100 TB this is the right shape: the polygon side is dimension-sized
 (broadcast), the fact side streams through executors once, partition
@@ -42,11 +45,8 @@ INTERIOR, BOUNDARY = 1, 2
 
 _BANDS_CACHE: dict = {}
 
-# Above this many total ring segments the single-plan JVM ray-cast (which
-# embeds every segment as a Catalyst literal) would outgrow codegen's
-# 64 KB method limit / driver plan memory — auto-switch to the Arrow
-# kernel path (VERDICT r01 #5).
-JVM_SEG_BUDGET = 10_000
+_SEG_COLS = ("x1", "y1", "x2", "y2")
+_SEG_SCHEMA = "poly_id string, " + ", ".join(f"{c} array<double>" for c in _SEG_COLS)
 
 # Classification can go FINER than the z12 storage pyramid: the GOL tile
 # cap is a storage-format constraint; in-engine acceleration may use any
@@ -109,13 +109,40 @@ def _cell_range(minx, miny, maxx, maxy, zoom: int) -> tuple[int, int, int, int]:
     return c0, c1, r0, r1
 
 
+def _segments(rings: list[np.ndarray]) -> np.ndarray:
+    """Every ring's segments as one (n, 4) float64 array of (x1, y1, x2, y2)
+    rows.  One array per polygon is enough for the exact test: crossing
+    parity over the union of rings == XOR of per-ring parities
+    (PointInPolygon.java:21-23)."""
+    return np.concatenate(
+        [np.concatenate([r[:-1], r[1:]], axis=1) for r in rings], axis=0
+    )
+
+
+def _segment_pdf(poly_ids, rings_per_poly) -> pd.DataFrame:
+    """One row per polygon: poly_id + the four coordinate arrays of its
+    segments (``_SEG_SCHEMA``), zipped JVM-side by ``_zip_segments``.
+    The arrays are Python lists, which ``createDataFrame`` accepts with
+    or without Arrow (a session built outside ``get_spark`` may lack it)."""
+    segs = [_segments(rings) for rings in rings_per_poly]
+    return pd.DataFrame(
+        {
+            "poly_id": list(poly_ids),
+            **{c: [a[:, i].tolist() for a in segs] for i, c in enumerate(_SEG_COLS)},
+        }
+    )
+
+
+def _zip_segments(df: DataFrame) -> DataFrame:
+    """(poly_id, x1[], y1[], x2[], y2[]) → (poly_id, segs array<struct<x1,y1,x2,y2>>)."""
+    return df.select("poly_id", F.arrays_zip(*_SEG_COLS).alias("segs"))
+
+
 def _segment_bbox_mins_maxs(rings: list[np.ndarray]):
     """Per-segment bbox corners as (n_segs, 1) columns for broadcast
     cell-intersection tests (shared by the quadtree classifier and the
     conservative boundary rasterizer)."""
-    segs = np.concatenate(
-        [np.concatenate([r[:-1], r[1:]], axis=1) for r in rings], axis=0
-    )
+    segs = _segments(rings)
     return (
         np.minimum(segs[:, 0], segs[:, 2])[:, None],
         np.maximum(segs[:, 0], segs[:, 2])[:, None],
@@ -334,58 +361,105 @@ def prepare_layer(polys: list[dict]) -> list[PreparedPolygon]:
     return cached
 
 
+def _cell_expr(zoom: int):
+    """Point's quadtree cell id at ``zoom`` — pure JVM bit arithmetic,
+    identical packing to ``_cell_ids``: (zoom<<40)|(row<<20)|col."""
+    return (
+        F.lit(zoom << 40).cast("long")
+        + F.shiftleft(T.row_from_y_col(F.col("y"), zoom).cast("long"), 20)
+        + T.column_from_x_col(F.col("x"), zoom).cast("long")
+    )
+
+
+def _pip_join(
+    points: DataFrame,
+    bands: DataFrame,
+    segs: DataFrame,
+    levels,
+    keep: list[str] | None,
+    anti: bool,
+) -> DataFrame:
+    """The one point-in-polygon join body behind ``contains_points``
+    (broadcast) and ``bigjoin.contains_points_big`` (partitioned).
+
+    bands: (cell long, poly_id string, band int) — the quadtree classification.
+    segs:  (poly_id string, segs array<struct<x1,y1,x2,y2>>).
+    levels: the zooms the band cells live on.
+
+    The probe explodes the point's cell id at every level and equi-joins
+    the band table (a quadtree leaf matches at most one level per
+    polygon, so no duplicates arise), then equi-joins the segment array
+    on poly_id.  INTERIOR rows match outright; BOUNDARY rows take the
+    exact ray-cast, a higher-order fold mirroring geo/pip.points_in_ring
+    op-for-op in float64.  ``anti=True`` returns the points matching NO
+    polygon via a left_anti join on keep (DisjointFilter form — keep
+    must identify a row, e.g. image_id).
+    """
+    keep = keep or [c for c in points.columns if c not in ("x", "y")]
+    # private names: the point side may carry its own ``cell`` column
+    # (the flagship keeps its tile cell)
+    bands = bands.toDF("_band_cell", "poly_id", "_band")
+    segs = segs.toDF("poly_id", "_segs")
+    probe = points.withColumn("_cell", F.explode(F.array(*[_cell_expr(z) for z in levels])))
+    j = probe.join(bands, F.col("_cell") == F.col("_band_cell")).join(segs, "poly_id")
+    xd = F.col("x").cast("double")
+    yd = F.col("y").cast("double")
+
+    def _crosses(sg):
+        c = ((sg["y1"] <= yd) & (sg["y2"] > yd)) | (
+            (sg["y1"] > yd) & (sg["y2"] <= yd)
+        )
+        return c & (
+            xd
+            < sg["x1"] + (yd - sg["y1"]) / (sg["y2"] - sg["y1"]) * (sg["x2"] - sg["x1"])
+        )
+
+    ncross = F.size(F.filter(F.col("_segs"), _crosses))
+    matches = j.filter(
+        (F.col("_band") == INTERIOR)
+        | ((F.col("_band") == BOUNDARY) & (ncross % 2 == 1))
+    ).select(*keep, "poly_id")
+    if not anti:
+        return matches
+    return points.select(*keep).join(
+        matches.select(*keep).distinct(), keep, "left_anti"
+    )
+
+
 def contains_points(
     points: DataFrame,
     prepared: list[PreparedPolygon],
     keep_cols: list[str] | None = None,
     anti: bool = False,
-    jvm_exact: bool | None = None,
 ) -> DataFrame:
     """Point-in-polygon broadcast join (flagship).
 
     Three-band plan, mirroring the reference's per-tile filter
-    substitution (TileIndexWalker.java:246-259, FastTileFilter.java:40-60)
-    while keeping the Python boundary minimal:
+    substitution (TileIndexWalker.java:246-259, FastTileFilter.java:40-60):
+    the layer's (cell, poly_id, band) table and its per-polygon segment
+    arrays are built on the driver from ``prepared`` and both BROADCAST
+    into ``_pip_join``.  INTERIOR candidates skip the exact test,
+    BOUNDARY candidates take the ray-cast fold, all else prunes — one
+    whole-stage-codegen pass over the point table, no shuffle of the
+    fact side, no Python worker, at any layer size.
 
-    1. A broadcast (cell, poly_id, band) table — the polygons' tile
-       classification — joins against the point's cell id, computed
-       JVM-side with bit arithmetic per classification zoom.  INTERIOR
-       matches complete entirely in the JVM (broadcast hash join inside
-       whole-stage codegen; no Python, no shuffle of the fact side).
-    2. Only BOUNDARY-band rows (a few % — tiles the polygon outline
-       touches) cross the Arrow boundary into the vectorized ray-cast
-       kernel, carrying just (x, y, poly_id, keep_cols).
-    3. Union of both bands; ``anti=True`` returns points matching NO
-       polygon via a left_anti join on keep_cols (DisjointFilter form —
-       keep_cols must identify a row, e.g. image_id).
-
-    points must carry int imp columns ``x`` and ``y``.
-
-    ``jvm_exact=None`` (default) picks the exact-test path by layer size:
-    the all-JVM literal-segment plan for dimension-sized layers, the
-    Arrow ray-cast kernel once total segments exceed JVM_SEG_BUDGET
-    (identical results either way — pinned in tests/test_spatial_join.py).
+    points must carry int imp columns ``x`` and ``y``.  Returns
+    (keep_cols…, poly_id) match rows, or with ``anti=True`` the points
+    matching no polygon (keep_cols must then identify a row).
     """
-    keep = keep_cols or [c for c in points.columns if c not in ("x", "y")]
-    if jvm_exact is None:
-        total_segs = sum(len(r) - 1 for p in prepared for r in p.rings)
-        jvm_exact = total_segs <= JVM_SEG_BUDGET
     spark = points.sparkSession
-    import pandas as pd_mod
-
     # Zooms present in the layer (packed in the cell ids' high bits) —
-    # needed for the probe explode whether or not the band table is
-    # cached; vectorized, no per-cell Python.
-    zoom_list = sorted(
+    # needed for the probe explode whether or not the frames are cached;
+    # vectorized, no per-cell Python.
+    levels = sorted(
         {int(z) for p in prepared for z in np.unique(p.qt_cells >> 40).tolist()}
     )
 
-    # The band table is query-compilation state (like the reference's
-    # cached matchers, MatcherCompiler.java:37-46) — build it once per
-    # (layer, session).  The key hashes the cell AND ring CONTENT, not
-    # just the shape: re-preparing an edited polygon with the same
-    # id/count must miss the cache (rings are in the key because the
-    # rings broadcast is cached alongside the band frame).
+    # The band and segment frames are query-compilation state (like the
+    # reference's cached matchers, MatcherCompiler.java:37-46) — built
+    # once per (layer, session).  The key hashes the cell AND ring
+    # CONTENT, not just the shape: re-preparing an edited polygon with the
+    # same id/count must miss the cache.
     import zlib
 
     cache_key = (
@@ -404,8 +478,8 @@ def contains_points(
     if entry is None:
         # Evict superseded entries first: same (poly_id set, session) but
         # different content means the layer was edited/re-prepared — the
-        # old cached band frame (and rings broadcast) would otherwise stay
-        # pinned in executor memory for the session's lifetime (ADVICE r01).
+        # old cached frames would otherwise stay pinned in executor memory
+        # for the session's lifetime (ADVICE r01).
         poly_ids = tuple(p.poly_id for p in prepared)
         for k in [
             k for k in _BANDS_CACHE
@@ -413,130 +487,30 @@ def contains_points(
         ]:
             old = _BANDS_CACHE.pop(k)
             old["bands"].unpersist()
-            if old["rings_bc"] is not None:
-                old["rings_bc"].unpersist()
-        # band rows assembled vectorized per polygon (the old per-cell
-        # Python loop ran on EVERY call, cache hit or not — r03 review)
-        bands_pdf = pd_mod.concat(
+            old["segs"].unpersist()
+        bands_pdf = pd.concat(
             [
-                pd_mod.DataFrame(
+                pd.DataFrame(
                     {
-                        "_band_cell": p.qt_cells.astype(np.int64),
+                        "cell": p.qt_cells.astype(np.int64),
                         "poly_id": p.poly_id,
-                        "_band": p.qt_codes.astype(np.int32),
+                        "band": p.qt_codes.astype(np.int32),
                     }
                 )
                 for p in prepared
             ],
             ignore_index=True,
         )
-        bands_df = spark.createDataFrame(
-            bands_pdf, schema="_band_cell long, poly_id string, _band int"
-        ).cache()
-        entry = {"bands": bands_df, "rings_bc": None}
+        segs_pdf = _segment_pdf(poly_ids, [p.rings for p in prepared])
+        entry = {
+            "bands": spark.createDataFrame(
+                bands_pdf, schema="cell long, poly_id string, band int"
+            ).cache(),
+            "segs": _zip_segments(spark.createDataFrame(segs_pdf, schema=_SEG_SCHEMA)).cache(),
+        }
         _BANDS_CACHE[cache_key] = entry
-    bands_df = entry["bands"]
-
-    # One exploded probe: the point's quadtree cell id at every zoom level
-    # present in the layer, joined once against the broadcast band table.
-    # All JVM (codegen explode + broadcast hash join); a quadtree leaf
-    # matches at most one zoom per polygon, so no duplicates arise.
-    def cell_expr(zoom: int):
-        return (
-            F.lit(zoom << 40).cast("long")
-            + F.shiftleft(T.row_from_y_col(F.col("y"), zoom).cast("long"), 20)
-            + T.column_from_x_col(F.col("x"), zoom).cast("long")
-        )
-
-    probe = points.withColumn(
-        "_cell", F.explode(F.array(*[cell_expr(z) for z in zoom_list]))
-    )
-    j = probe.join(F.broadcast(bands_df), F.col("_cell") == bands_df._band_cell)
-
-    if jvm_exact:
-        # Single-scan plan: the exact ray-cast runs as a JVM
-        # higher-order fold over a per-polygon segment array (map
-        # literal, poly_id → array<struct x1,y1,x2,y2>), mirroring
-        # geo/pip.points_in_ring op-for-op in float64 — crossing parity
-        # over ALL rings' segments == XOR of per-ring parities
-        # (PointInPolygon.java:21-23).  No union, no second probe-join
-        # subtree, no Python worker: whole-stage codegen end to end.
-        entries = []
-        for p in prepared:
-            segs = []
-            for ring in p.rings:
-                for i in range(len(ring) - 1):
-                    segs.append(
-                        F.struct(
-                            F.lit(float(ring[i, 0])).alias("x1"),
-                            F.lit(float(ring[i, 1])).alias("y1"),
-                            F.lit(float(ring[i + 1, 0])).alias("x2"),
-                            F.lit(float(ring[i + 1, 1])).alias("y2"),
-                        )
-                    )
-            entries += [F.lit(p.poly_id), F.array(*segs)]
-        seg_map = F.create_map(*entries)
-        xd = F.col("x").cast("double")
-        yd = F.col("y").cast("double")
-
-        def _crosses(sg):
-            c = ((sg["y1"] <= yd) & (sg["y2"] > yd)) | (
-                (sg["y1"] > yd) & (sg["y2"] <= yd)
-            )
-            return c & (
-                xd
-                < sg["x1"] + (yd - sg["y1"]) / (sg["y2"] - sg["y1"]) * (sg["x2"] - sg["x1"])
-            )
-
-        ncross = F.size(F.filter(F.element_at(seg_map, F.col("poly_id")), _crosses))
-        matches = j.filter(
-            (F.col("_band") == INTERIOR)
-            | ((F.col("_band") == BOUNDARY) & (ncross % 2 == 1))
-        ).select(*keep, "poly_id")
-        if not anti:
-            return matches
-        return points.select(*keep).join(
-            matches.select(*keep).distinct(), keep, "left_anti"
-        )
-
-    interior = j.filter(F.col("_band") == INTERIOR).select(*keep, "poly_id")
-    boundary = j.filter(F.col("_band") == BOUNDARY).select(*keep, "x", "y", "poly_id")
-
-    # the rings broadcast is only needed on THIS (Arrow-kernel) path, and
-    # is cached per layer beside the band frame — the old code broadcast
-    # it unconditionally per call and never released it (r03 review)
-    if entry["rings_bc"] is None:
-        entry["rings_bc"] = spark.sparkContext.broadcast(
-            {p.poly_id: p.rings for p in prepared}
-        )
-    bc_rings = entry["rings_bc"]
-
-    def exact(batches):
-        rings_map = bc_rings.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = pdf["x"].to_numpy(dtype=np.float64)
-            y = pdf["y"].to_numpy(dtype=np.float64)
-            hit = np.zeros(len(pdf), dtype=bool)
-            for poly_id, grp in pdf.groupby("poly_id", sort=False):
-                pos = pdf.index.get_indexer(grp.index.to_numpy())
-                hit[pos] = pip.points_in_polygon(x[pos], y[pos], rings_map[poly_id])
-            out = pdf.loc[hit, [*keep, "poly_id"]]
-            if len(out):
-                yield out
-
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in points.schema.fields
-        if f.name in keep
-    ) + ", poly_id string"
-    exact_hits = boundary.mapInPandas(exact, schema=out_schema)
-    matches = interior.unionByName(exact_hits)
-    if not anti:
-        return matches
-    return points.select(*keep).join(
-        matches.select(*keep).distinct(), keep, "left_anti"
+    return _pip_join(
+        points, F.broadcast(entry["bands"]), F.broadcast(entry["segs"]), levels, keep_cols, anti
     )
 
 

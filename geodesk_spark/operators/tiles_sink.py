@@ -245,14 +245,6 @@ def rasterize_pixel_counts(points: DataFrame, zoom: int = 8):
     )
 
 
-def rasterize_counts(points: DataFrame, tile_col: str = "tile_z8"):
-    """Vector→raster aggregate without file IO: per-tile point counts
-    (the partition-pruned rollup used by bench/lineage metrics)."""
-    from pyspark.sql import functions as F
-
-    return points.groupBy(tile_col).agg(F.count("*").alias("n_points"))
-
-
 def quantize_for_tiles(
     lines: DataFrame,
     zoom: int,

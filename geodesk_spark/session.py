@@ -17,6 +17,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """The one host-sizing knob: ``SPARK_GRAFT_CPUS``, else ``os.cpu_count()``."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+
+
 def get_spark(
     app_name: str = "geodesk-spark",
     cores: int | None = None,
@@ -24,7 +29,7 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     b = (

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from geodesk_spark.geo import pip
+from geodesk_spark.geo import mercator, pip
 from geodesk_spark.operators import bigjoin, spatial_join, tiling
 from geodesk_spark.sources import synth
 
@@ -84,16 +84,78 @@ def test_big_join_no_duplicate_candidates(spark, world, layer):
     assert n == nd
 
 
-def test_big_join_plan_has_no_layer_literals(spark, world, layer):
-    """Plan size stays O(1) in the layer: geometry travels as data, so the
-    analyzed plan string must not embed per-vertex literals (the broadcast
-    jvm_exact path embeds thousands of float literals; this path none)."""
-    df, _ = world
-    out = bigjoin.contains_points_big(df, _layer_df(spark, layer), keep_cols=["image_id"])
-    plan = out._jdf.queryExecution().analyzed().toString()
-    ring0 = pip.unpack_rings(layer[0]["rings"])[0]
-    assert repr(float(ring0[0, 0])) not in plan
-    assert len(plan) < 100_000
+def _ngon_layer(n_polys: int, n_verts: int) -> list[dict]:
+    """Many detailed polygons: regular n-gons on a lon/lat grid."""
+    polys = []
+    for i in range(n_polys):
+        lon = -150 + (i % 20) * 15.0
+        lat = -60 + (i // 20) * 25.0
+        cx = float(mercator.x_from_lon(lon)[()])
+        cy = float(mercator.y_from_lat(lat)[()])
+        ang = np.arange(n_verts) * (2 * np.pi / n_verts)
+        r = 40_000_000 * (1 + 0.1 * np.sin(5 * ang + i))
+        ring = np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
+        ring = np.vstack([ring, ring[:1]]).astype(np.float64)
+        polys.append(dict(poly_id=f"ngon_{i}", rings=pip.pack_rings([ring])))
+    return polys
+
+
+@pytest.fixture(scope="module")
+def big_layer():
+    return _ngon_layer(12, 900)  # 10 800 segments
+
+
+def _pairs(df):
+    return set(map(tuple, df.toPandas()[["image_id", "poly_id"]].to_numpy().tolist()))
+
+
+_ENTRY_POINTS = {
+    "contains_points": lambda df, layer: spatial_join.contains_points(
+        df, spatial_join.prepare_layer(layer), keep_cols=["image_id"]
+    ),
+    "contains_points_big": lambda df, layer: bigjoin.contains_points_big(
+        df, _layer_df(df.sparkSession, layer), keep_cols=["image_id"]
+    ),
+}
+
+
+def test_many_segment_layer_matches_bruteforce_and_big(world, big_layer):
+    """A layer with more segments than fit as plan literals: the
+    broadcast join equals brute force and the partitioned join."""
+    df, pdf = world
+    got = _pairs(_ENTRY_POINTS["contains_points"](df, big_layer))
+    assert got == _pairs(_ENTRY_POINTS["contains_points_big"](df, big_layer))
+
+    x = pdf["x"].to_numpy(dtype=np.float64)
+    y = pdf["y"].to_numpy(dtype=np.float64)
+    exp = set()
+    for p in big_layer:
+        inside = pip.points_in_polygon(x, y, pip.unpack_rings(p["rings"]))
+        exp |= {(iid, p["poly_id"]) for iid in pdf["image_id"].to_numpy()[inside]}
+    assert got == exp and len(got) > 0
+
+
+@pytest.mark.parametrize("entry", sorted(_ENTRY_POINTS))
+def test_big_join_plan_has_no_layer_literals(world, layer, big_layer, entry):
+    """Plan size stays O(1) in the layer on both entry points: geometry
+    travels as data, so the analyzed plan embeds no per-vertex literal,
+    for a small layer and a 10 800-segment one alike.  The broadcast
+    join has no Python node at any layer size (the partitioned one
+    prepares the layer in an Arrow pass by design).  The points come from
+    a pandas frame so that no Python node sits below the join."""
+    df, pdf = world
+    pts = df.sparkSession.createDataFrame(pdf)
+    for lay in (layer, big_layer):
+        out = _ENTRY_POINTS[entry](pts, lay)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        ring0 = pip.unpack_rings(lay[0]["rings"])[0]
+        assert repr(float(ring0[0, 0])) not in plan
+        assert len(plan) < 100_000
+        if entry == "contains_points":
+            executed = out._jdf.queryExecution().executedPlan().toString()
+            for py_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                            "FlatMapGroupsInPandas"):
+                assert py_node not in executed, py_node
 
 
 # ---------------------------------------------------------------- crossing join

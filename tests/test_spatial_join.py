@@ -89,42 +89,38 @@ def test_knn_matches_bruteforce(world):
         assert list(sub["image_id"]) == exp, qid
 
 
-def _ngon_layer(n_polys: int, n_verts: int) -> list[dict]:
-    """Many detailed polygons: regular n-gons on a lon/lat grid."""
-    polys = []
-    for i in range(n_polys):
-        lon = -150 + (i % 20) * 15.0
-        lat = -60 + (i // 20) * 25.0
-        cx = float(mercator.x_from_lon(lon)[()])
-        cy = float(mercator.y_from_lat(lat)[()])
-        ang = np.arange(n_verts) * (2 * np.pi / n_verts)
-        r = 40_000_000 * (1 + 0.1 * np.sin(5 * ang + i))
-        ring = np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
-        ring = np.vstack([ring, ring[:1]]).astype(np.float64)
-        polys.append(dict(poly_id=f"ngon_{i}", rings=pip.pack_rings([ring])))
-    return polys
-
-
-def test_jvm_auto_switch_identical(world, monkeypatch):
-    """Vertex-budget auto-switch (VERDICT r01 #5): above JVM_SEG_BUDGET the
-    join must drop the literal-segment plan for the Arrow kernel, with
-    identical output; the auto plan must not embed the segment map."""
+def test_bands_cache_evicts_edited_layer(world, layer):
+    """Re-preparing a layer whose polygon ids are unchanged but one ring
+    is edited evicts the old _BANDS_CACHE entry, unpersists both of its
+    cached frames, and leaves one entry per (poly-id set, session)."""
     df, _ = world
-    pts = df.select("image_id", "x", "y").limit(4000)
-    layer = _ngon_layer(12, 60)  # 720 segments
-    prepared = spatial_join.prepare_layer(layer)
-    monkeypatch.setattr(spatial_join, "JVM_SEG_BUDGET", 500)
+    spark = df.sparkSession
+    poly_ids = tuple(p["poly_id"] for p in layer)
 
-    auto = spatial_join.contains_points(pts, prepared, keep_cols=["image_id"])
-    forced = spatial_join.contains_points(pts, prepared, keep_cols=["image_id"], jvm_exact=True)
-    got_auto = set(map(tuple, auto.toPandas()[["image_id", "poly_id"]].to_numpy().tolist()))
-    got_jvm = set(map(tuple, forced.toPandas()[["image_id", "poly_id"]].to_numpy().tolist()))
-    assert got_auto == got_jvm and len(got_auto) > 0
-    # the auto plan fell back to the kernel: no giant map literal
-    auto_plan = auto._jdf.queryExecution().executedPlan().toString()
-    forced_plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "map(" not in auto_plan and "MapInPandas" in auto_plan
-    assert len(auto_plan) < len(forced_plan)
+    def entries():
+        return [
+            k for k in spatial_join._BANDS_CACHE
+            if k[1] == id(spark) and tuple(e[0] for e in k[0]) == poly_ids
+        ]
+
+    spatial_join.contains_points(df, spatial_join.prepare_layer(layer), keep_cols=["image_id"])
+    (key,) = entries()
+    old = spatial_join._BANDS_CACHE[key]
+    assert old["bands"].storageLevel.useMemory and old["segs"].storageLevel.useMemory
+
+    # Shift the first polygon's shell by 16 finest-level cells, so that
+    # neither new frame has the same content as (and so shares a cache
+    # entry with) the old one.
+    rings = pip.unpack_rings(layer[0]["rings"])
+    rings = [rings[0] + np.float64(1 << 20), *rings[1:]]
+    edited = [dict(layer[0], rings=pip.pack_rings(rings)), *layer[1:]]
+    spatial_join.contains_points(df, spatial_join.prepare_layer(edited), keep_cols=["image_id"])
+
+    assert key not in spatial_join._BANDS_CACHE
+    for frame in (old["bands"], old["segs"]):
+        level = frame.storageLevel
+        assert not (level.useMemory or level.useDisk)
+    assert len(entries()) == 1
 
 
 def test_knn_many_queries_bounded(world):
